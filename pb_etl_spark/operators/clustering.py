@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from pb_etl_spark.catalog import read_table
 from pb_etl_spark.operators.dedup import q_minhash_near_dup_pairs
+from pb_etl_spark.operators.insights import LP_TAU, _threshold_graph_pass
 from pb_etl_spark.session import stats_reset_checkpoint
 
 MAX_ROUNDS = 64  # hook+jump needs roughly O(log diameter) rounds with a
@@ -648,7 +649,7 @@ ORACLES_TRIANGLES = (
 )
 
 
-KC_TAU = 0.25  # similarity-threshold edge bar for the k-core graph
+KC_TAU = LP_TAU  # the shared threshold graph's edge bar (0.25)
 KC_K = 3  # degree threshold: the 3-core
 KC_ROUNDS = 12  # fixed peel rounds, unrolled in the oracle — measured
 #   fixpoint is ≤ 9 rounds at sf0.1/0.25/3 (see test_k_core_converges);
@@ -666,110 +667,29 @@ def q_k_core_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike the fixed-kNN graph (uniform out-degree 5 — its k-core is
     all-or-nothing), the THRESHOLD graph (cos ≥ 0.25) has heterogeneous
     degrees, so the peel genuinely iterates (4-9 rounds on the
-    fixtures). The peel runs ``KC_ROUNDS`` fixed rounds — each one
-    degree-count + filter over the bounded node/edge frames — so the
-    DuckDB oracle replays the identical unrolled rounds; rounds past
-    the fixpoint are no-ops. Output: every node with its final
-    in-3-core flag and its degree within the core (0 outside).
+    fixtures). The peel runs ``KC_ROUNDS`` fixed rounds in-plan over
+    the shared threshold-graph pass (``insights._threshold_graph_pass``,
+    the label-propagation/BFS graph): each round keeps a node iff it is
+    still in and has ≥ k neighbors still in, so the DuckDB oracle replays the
+    identical unrolled rounds; rounds past the fixpoint are no-ops.
+    Output: every node with its final in-3-core flag and its degree
+    within the core (0 outside).
 
     Scale: the slice is bounded (like pagerank_knn); on a full-corpus
-    graph each round is one fact-sized semi-join + grouped count, and
-    the right algorithm becomes distributed bucket peeling (delete all
-    sub-k nodes per round — exactly this loop) with the edge list
+    graph the right algorithm becomes distributed bucket peeling (delete
+    all sub-k nodes per round — exactly this step) with the edge list
     pre-partitioned by node id so every round reuses the partitioning."""
-    emb = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < PR_NODES)
-    v = emb.select(
-        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
-    )
-    from pb_etl_spark.operators._width import pair_build_width
-    from pb_etl_spark.operators.similarity import _dot, _norm
-
-    # Spread the bounded quadratic pair build across cores: the fixture
-    # parquet is a single row group, so the scan (and therefore the
-    # whole 200×200 cosine pass) otherwise runs as ONE task — measured
-    # 0.55 s of this query's 2.3 s at sf0.1 on local[32] (r14 profile).
-    # Width capped at the slice bound so a wide deployment knob can't
-    # shatter 200 rows into thousands of empty tasks.
-    a = v.repartition(pair_build_width(spark, PR_NODES)).alias("a")
-    b = v.alias("b")
-    cos = _dot("a.v", "b.v") / (_norm("a.v") * _norm("b.v"))
-    # bounded 200×200 pair build; eager checkpoint keeps the BNLJ out
-    # of the registered plan (the pagerank_knn/triangle pattern) and
-    # materializes the ≤|slice|² edge list every round reads
-    und = (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("lo"), F.col("b.id").alias("hi"), cos.alias("c"))
-        .filter(F.col("c") >= KC_TAU)
-        .select("lo", "hi")
-        .localCheckpoint(eager=True)
-    )
-    nodes = emb.select(F.col("vec_id").alias("node"))
-
-    # Driver-bounded peel (r14 optimization): the active set is ≤
-    # PR_NODES rows BY CONSTRUCTION (a compile-time constant), so it
-    # rides the same bounded-scalar channel as the early-exit count the
-    # loop already collected — one ≤200-id collect per round, membership
-    # pushed back as an IN-set literal (InSet: O(1) hash probe per row).
-    # The previous formulation spent ~6 Spark jobs per round (two
-    # broadcast builds for the semi-joins + an eager checkpoint + a
-    # count, each with AQE re-planning latency): 76 jobs / 4.5 s wall at
-    # sf0.1, of which 2.2 s was driver-side gaps between 10-60 ms jobs.
-    # This shape is 1 job per round and needs NO per-round checkpoint
-    # because each round's plan restarts from the checkpointed edge
-    # list plus a literal. On an UNBOUNDED graph the distributed
-    # formulation (per-round semi-joins against the live set, edge list
-    # pre-partitioned by node id — distributed bucket peeling) remains
-    # the right algorithm; this operator's contract is the bounded
-    # slice, where shipping ≤200 ids beats shipping two broadcasts.
-    # the checkpointed pair list is ≤ PR_NODES² rows in 32 cached block
-    # partitions; reading it 1-wide per round costs nothing (cached
-    # blocks, no recompute) and halves the per-round stage overhead
-    und = und.coalesce(1)
-
-    def _live(id_list: list[int]) -> "DataFrame":
-        # one F.expr per round instead of Column.isin(ids): isin ships
-        # each element through its own py4j lit() (~0.25 s of driver
-        # time per round at 174 ids — measured r14); a rendered IN list
-        # is a single roundtrip and plans to the same InSet. [-1]
-        # sentinel: no vec_id is negative, so an emptied active set
-        # keeps the "no edge survives" semantics without a degenerate
-        # empty IN ().
-        in_list = ",".join(map(str, id_list or [-1]))
-        return und.filter(F.expr(f"lo IN ({in_list}) AND hi IN ({in_list})"))
-
-    ids = sorted(r[0] for r in nodes.collect())
-    from pb_etl_spark.operators.insights import _assert_literal_state_bound
-
-    _assert_literal_state_bound(len(ids), PR_NODES, "k_core_knn")
-    prev_n = len(ids)
-    for _ in range(KC_ROUNDS):
-        deg = (
-            _live(ids)
-            .select(F.explode(F.array("lo", "hi")).alias("node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        ids = sorted(
-            r[0] for r in deg.filter(F.col("deg") >= KC_K).select("node").collect()
-        )
-        # peeling only REMOVES nodes, so an unchanged count IS the
-        # fixpoint; the oracle's extra unrolled rounds past the
-        # fixpoint are identity steps, so results agree
-        if len(ids) == prev_n:
-            break
-        prev_n = len(ids)
-    # final in-core degree, recomputed on the fixpoint set
-    core_deg = (
-        _live(ids)
-        .select(F.explode(F.array("lo", "hi")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
-    in_core = F.expr(f"node IN ({','.join(map(str, ids or [-1]))})")
-    return nodes.join(F.broadcast(core_deg), "node", "left").select(
-        "node",
-        in_core.alias("in_core"),
-        F.coalesce("core_degree", F.lit(0)).alias("core_degree"),
+    live_deg = "size(filter(nb[i], j -> s[j]))"
+    return _threshold_graph_pass(
+        spark,
+        sf_dir,
+        KC_ROUNDS,
+        init="transform(g, x -> true)",
+        step=f"transform(s, (on, i) -> on AND {live_deg} >= {KC_K})",
+        emit=(
+            "transform(g, (x, i) -> named_struct('node', x.id, 'in_core', s[i], "
+            f"'core_degree', CAST(IF(s[i], {live_deg}, 0) AS BIGINT)))"
+        ),
     )
 
 

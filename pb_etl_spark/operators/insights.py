@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from pb_etl_spark.catalog import read_table
+from pb_etl_spark.operators.similarity import _dot_sql, _let, _norm
 from pb_etl_spark.operators.timeseries import _cents  # the shared cents grid
 
 
@@ -277,81 +278,50 @@ BFS_SEED_MOD = 40  # seeds: vec_id % 40 == 0 (5 seeds in the slice)
 BFS_INF = 1_000_000  # unreached sentinel inside the relaxation
 
 
-def _assert_literal_state_bound(n: int, bound: int, site: str) -> None:
-    """Refuse driver-bounded literal-state mode when the slice outgrows
-    its compile-time bound (r14 verdict item 4): the per-round collect +
-    id-indexed-literal pattern is only correct/cheap because the id
-    count is a small constant. Someone raising the bound 100× without
-    revisiting would silently turn each round into a multi-MB plan
-    literal and a driver-memory hazard — fail loudly and point at the
-    documented distributed formulation instead."""
-    if n > 4 * bound:
-        raise ValueError(
-            f"{site}: {n} ids exceed 4x the compile-time literal-state "
-            f"bound ({bound}); the driver-bounded formulation only holds "
-            "for constant-bounded slices — switch to the distributed "
-            "join+checkpoint formulation documented at this call site"
-        )
+def _threshold_graph_pass(
+    spark: SparkSession,
+    sf_dir: str,
+    rounds: int,
+    init: str,
+    step: str,
+    emit: str,
+) -> DataFrame:
+    """Fixed-round synchronous pass over the cosine-threshold graph of the
+    bounded slice (vec_id < ``LP_NODES``, edge iff cos ≥ ``LP_TAU``), run
+    in-plan as one row: the slice is collected into ``g`` (structs of
+    id, norm, vector, sorted by id), adjacency ``nb[i]`` is the array of
+    neighbor POSITIONS in ``g`` (so sparse ids need no special case),
+    and ``rounds`` rounds fold the per-node state ``s`` with the SQL
+    lambdas ``init`` (over ``g``), ``step`` (``s`` → ``s``) and ``emit``
+    (``s`` → array of output-row structs, inlined into rows). No
+    self-join, no checkpoint, no per-round job.
 
+    The cosine chain is ``_dot``/``_norm``'s sequential fold, so the
+    ``>= LP_TAU`` edge test matches the oracle's edge set bit-for-bit.
 
-def _id_indexed_array_sql(values: dict[int, int]) -> str:
-    """SQL text of a BIGINT array literal indexed by node id (the
-    bounded slices' vec_ids are 0-based), rendered as ONE string so the
-    whole literal costs a single py4j roundtrip — a ``F.lit``-per-
-    element array costs one roundtrip each (~0.25 s per round at 200
-    entries, measured r14). Ids absent from ``values`` hold NULL; reads
-    go through ``F.get`` (OOB/NULL-safe under ANSI, unlike ``arr[i]``)."""
-    if not values:
-        # ADVICE r14: bare array() types as ARRAY<VOID>; pin the element
-        # type so an empty bounded slice cannot silently change the
-        # lookup column's type
-        return "CAST(array() AS ARRAY<BIGINT>)"
-    items = ",".join(
-        f"{values[i]}L" if i in values else "CAST(NULL AS BIGINT)"
-        for i in range(max(values) + 1)
-    )
-    return f"array({items})"
-
-
-def _threshold_graph(spark: SparkSession, sf_dir: str):
-    """(nodes, und) of the cosine-threshold graph over the bounded
-    slice; both eagerly checkpointed — truncates lineage for the
-    round loops and keeps the bounded BNLJ pair build out of the
-    registered plan (the k_core_knn pattern, clustering.py:660)."""
-    from pb_etl_spark.operators.similarity import _dot, _norm
-
-    from pb_etl_spark.operators._width import pair_build_width
-
-    emb = read_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < LP_NODES
-    )
-    v = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    # spread the bounded quadratic pair build across cores (the fixture
-    # scan is one row group = one task; measured 0.46-0.57 s single-task
-    # at sf0.1), width capped at the slice bound (k_core pattern)
-    a = v.repartition(pair_build_width(spark, LP_NODES)).alias("a")
-    b = v.alias("b")
-    cos = _dot("a.v", "b.v") / (_norm("a.v") * _norm("b.v"))
-    und = (
-        a.join(b, F.col("a.id") < F.col("b.id"))
+    Scale: the bounded slice is the contract; on a full-corpus graph
+    each round becomes a join of the state frame onto a partitioned
+    edge list (the textbook Pregel step)."""
+    nodes = (
+        read_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < LP_NODES)
         .select(
-            F.col("a.id").alias("lo"), F.col("b.id").alias("hi"), cos.alias("c")
+            F.col("vec_id").alias("id"),
+            F.col("embedding").cast("array<double>").alias("v"),
         )
-        .filter(F.col("c") >= LP_TAU)
-        .select("lo", "hi")
-        .localCheckpoint(eager=True)
-        # ≤ LP_NODES² rows in cached blocks: read 1-wide per round (no
-        # recompute — parent is checkpointed), halving stage overhead
-        .coalesce(1)
+        .withColumn("n", _norm("v"))
     )
-    nodes = emb.select(F.col("vec_id").alias("node"))
-    nbr = und.select(
-        F.col("lo").alias("a"), F.col("hi").alias("b")
-    ).unionAll(und.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
-    return nodes, nbr
+    cos = f"{_dot_sql('x.v', 'g[j].v')} / (x.n * g[j].n)"
+    adj = (
+        "transform(g, (x, i) -> filter(sequence(0, size(g) - 1), "
+        f"j -> j != i AND {cos} >= {LP_TAU!r}D))"
+    )
+    passes = f"aggregate(sequence(1, {rounds}), {init}, (s, r) -> {step}, s -> {emit})"
+    return (
+        nodes.groupBy()
+        .agg(F.collect_list(F.struct("id", "n", "v")).alias("gs"))
+        .select(F.inline(F.expr(_let("g", "array_sort(gs)", _let("nb", adj, passes)))))
+    )
 
 
 def q_label_propagation_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,44 +332,24 @@ def q_label_propagation_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``LP_ROUNDS`` synchronous rounds with deterministic tie-breaks make
     the result engine-exact; the oracle unrolls the identical rounds.
 
-    Scale: each round is one equi-join (labels onto the edge list) +
-    one grouped count + one per-node argmax — all shuffling on node id,
-    reusing one partitioning; the frontier frames are checkpointed per
-    round to truncate lineage (driver-coordinated loop, the k-core
-    trade-off: right for the bounded slice, and the same per-round plan
-    is the full-corpus variant)."""
-    nodes, nbr = _threshold_graph(spark, sf_dir)
-    # Driver-bounded label state (r14, the k_core_knn pattern): the
-    # label map is ≤ LP_NODES entries BY CONSTRUCTION (compile-time
-    # constant), so each round collects the ≤200-row argmax result and
-    # pushes the labels back as an id-indexed ARRAY literal (O(1)
-    # GetArrayItem per edge) instead of a join + eager checkpoint. The
-    # frequency count and the argmax window stay distributed; only
-    # membership state rides the driver. Replaces ~5 Spark jobs +
-    # checkpoint bookkeeping per round (measured 35 jobs / 2.4 s wall
-    # at sf0.1, half of it driver-side gaps). On an UNBOUNDED graph the
-    # label join + checkpoint formulation remains the right algorithm.
-    labels = {r[0]: r[0] for r in nodes.collect()}
-    _assert_literal_state_bound(len(labels), LP_NODES, "label_propagation_knn")
-    for _ in range(LP_ROUNDS):
-        arr = F.expr(_id_indexed_array_sql(labels))
-        neigh = nbr.select(
-            F.col("a").alias("node"),
-            F.get(arr, F.col("b").cast("int")).alias("label"),
-        )
-        counted = neigh.groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        w = W.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
-        best = (
-            counted.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node", "label")
-        )
-        labels.update({r[0]: r[1] for r in best.collect()})
-    out = F.expr(_id_indexed_array_sql(labels))
-    return nodes.select(
-        "node", F.get(out, F.col("node").cast("int")).alias("label")
+    Runs in-plan (``_threshold_graph_pass``): per node, the neighbor
+    labels are bound once, and the new label is ``array_max`` over
+    (count, −label) structs of the distinct neighbor labels — highest
+    count, ties to the smallest label; NULL (no neighbors) keeps the
+    old label."""
+    mode = _let(
+        "ls",
+        "transform(nb[i], j -> s[j])",
+        "-array_max(transform(array_distinct(ls), "
+        "c -> named_struct('n', size(filter(ls, x -> x = c)), 'neg', -c))).neg",
+    )
+    return _threshold_graph_pass(
+        spark,
+        sf_dir,
+        LP_ROUNDS,
+        init="transform(g, x -> x.id)",
+        step=f"transform(s, (l, i) -> coalesce({mode}, l))",
+        emit="transform(g, (x, i) -> named_struct('node', x.id, 'label', s[i]))",
     )
 
 
@@ -410,42 +360,22 @@ def q_bfs_hops_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist(u)+1). Rounds past the fixpoint are identity steps, so the
     unrolled oracle agrees; unreached nodes emit hops = −1.
 
-    Scale: per round one equi-join + grouped MIN + keyed LEAST — the
-    textbook Pregel step as DataFrame ops, one node-id partitioning
-    reused throughout, checkpoint per round (bounded slice; same
-    per-round plan is the full-graph variant)."""
-    nodes, nbr = _threshold_graph(spark, sf_dir)
-    # driver-bounded distance state (r14, the k_core_knn /
-    # label_propagation pattern — see q_label_propagation_knn): the
-    # grouped MIN over neighbor distances stays distributed; the ≤
-    # BFS-slice-bounded relaxation combine (pure int64 min, engine-
-    # neutral) rides the driver, killing the per-round join + eager
-    # checkpoint jobs
-    dist = {
-        r[0]: (0 if r[0] % BFS_SEED_MOD == 0 else BFS_INF)
-        for r in nodes.collect()
-    }
-    _assert_literal_state_bound(len(dist), LP_NODES, "bfs_hops_knn")
-    for _ in range(BFS_ROUNDS):
-        arr = F.expr(_id_indexed_array_sql(dist))
-        reach = (
-            nbr.select(
-                F.col("a").alias("node"),
-                F.get(arr, F.col("b").cast("int")).alias("d"),
-            )
-            .groupBy("node")
-            .agg(F.min("d").alias("mind"))
-        )
-        for r in reach.collect():
-            nd = r["mind"] + 1
-            if nd < dist[r["node"]]:
-                dist[r["node"]] = nd
-    out = F.get(
-        F.expr(_id_indexed_array_sql(dist)), F.col("node").cast("int")
-    )
-    return nodes.select(
-        "node",
-        F.when(out >= BFS_INF, F.lit(-1)).otherwise(out).cast("long").alias("hops"),
+    Runs in-plan (``_threshold_graph_pass``): each round is one
+    ``transform`` over the distance array (pure int64 min, engine-
+    neutral)."""
+    return _threshold_graph_pass(
+        spark,
+        sf_dir,
+        BFS_ROUNDS,
+        init=f"transform(g, x -> IF(x.id % {BFS_SEED_MOD} = 0, 0L, {BFS_INF}L))",
+        step=(
+            "transform(s, (d, i) -> least(d, "
+            f"coalesce(array_min(transform(nb[i], j -> s[j])) + 1, {BFS_INF}L)))"
+        ),
+        emit=(
+            "transform(g, (x, i) -> named_struct('node', x.id, "
+            f"'hops', IF(s[i] >= {BFS_INF}, -1L, s[i])))"
+        ),
     )
 
 

@@ -42,10 +42,7 @@ def _dot(a, b):
     sequential-fold expression — value equality is pinned in
     tests/test_r14_optimizations.py and by every cosine oracle."""
     if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            "0.0D, (acc, v) -> acc + v)"
-        )
+        return F.expr(_dot_sql(a, b))
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -56,15 +53,33 @@ def _dot(a, b):
 def _norm(a):
     """L2 norm; same dual string/Column contract as ``_dot``."""
     if isinstance(a, str):
-        return F.expr(
-            f"sqrt(aggregate(transform({a}, x -> x * x), "
-            "0.0D, (acc, v) -> acc + v))"
-        )
+        return F.expr(_norm_sql(a))
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v
         )
     )
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of ``_dot``, for use inside a larger SQL expression."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
+
+
+def _norm_sql(a: str) -> str:
+    """SQL text of ``_norm``, for use inside a larger SQL expression."""
+    return f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, (acc, v) -> acc + v))"
+
+
+def _let(name: str, value: str, body: str) -> str:
+    """SQL ``let name = value in body``: ``value`` is evaluated ONCE and
+    bound as a lambda variable through ``aggregate``'s finish lambda.
+
+    Bounded iterative state must be bound this way rather than projected
+    in one ``select`` and read inside a lambda in the next: CollapseProject
+    inlines the projected expression into the lambda, where it is then
+    re-evaluated for every element that reads it."""
+    return f"aggregate(array(0), {value}, ({name}, _) -> {name}, {name} -> {body})"
 
 
 def _cos_or_zero(dot, nrm_prod):
@@ -734,18 +749,22 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval head (a plain top-k returns 5 near-duplicates of the same
     neighborhood; MMR spends the tail slots on coverage).
 
-    The greedy loop is unrolled as ``MMR_K − 1`` bounded DataFrame
-    steps over the candidate frame (≤ queries × 10 rows, checkpointed
-    once, so each step is a tiny join — never a corpus rescan), and the
-    argmax is a deterministic window (score desc, n_id asc). Every
-    double chain (rel, pairwise sims, the score) is identical in the
-    DuckDB oracle, which replays the same greedy steps as unrolled CTEs
-    — the selection ORDER itself is value-checked, not just the set."""
+    One in-plan pass: each query's ≤ MMR_CAND candidates are collected
+    into one row (sorted by n_id), the pairwise-sim matrix is built in
+    that row, and ``MMR_K`` greedy rounds run as one SQL ``aggregate``
+    over per-candidate state (max-sim to the picks so far, updated
+    incrementally after each pick; pick round; score at pick time).
+    Each round's argmax is ``array_max`` over (score, −position)
+    structs: highest score, ties to the smallest n_id — the oracle's
+    (score desc, n_id asc) window. Every double chain (rel, pairwise
+    sims, the score) is identical in the DuckDB oracle, which replays
+    the same greedy steps as unrolled CTEs — the selection ORDER itself
+    is value-checked, not just the set."""
     raw = read_table(spark, sf_dir, "embeddings")
-    emb = raw.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    # candidate pool with vectors retained for the pairwise-sim join;
-    # checkpointed: ~(MMR_K+1) consuming subtrees would otherwise rerun
-    # the corpus scan per greedy step
+    emb = raw.select(
+        F.col("vec_id").alias("n_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+    )
     # rel rides cosine_topk's 6-dp-rounded cos, and the pairwise sims
     # are SNAPPED to a 1e-9 grid (the pagerank per-step quantization):
     # the engines' cosine chains can differ by an ulp, and the greedy
@@ -755,70 +774,53 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the unrounded cos (knn_cosine's established selection semantics).
     cand = (
         cosine_topk(raw, raw.filter(F.col("vec_id") < N_QUERY_VECS), k=MMR_CAND)
-        .join(emb.select(F.col("vec_id").alias("n_id"), "v"), "n_id")
-        .select("q_id", "n_id", F.col("cos").alias("rel"), "v")
-        .localCheckpoint(eager=True)
+        .join(emb, "n_id")
+        .withColumn("n", _norm("v"))
+        .groupBy("q_id")
+        .agg(
+            F.collect_list(
+                F.struct("n_id", F.col("cos").alias("rel"), "n", "v")
+            ).alias("cs")
+        )
     )
-    a, b = cand.alias("a"), cand.alias("b")
+    # one row per query: c = candidates sorted by n_id (so the smallest
+    # position is the smallest n_id), sim = their pairwise-sim matrix,
+    # st = per-candidate state (max sim to the picks so far, pick round
+    # or 0, score at pick time), t = the greedy round
+    pos = "sequence(0, size(c) - 1)"
     sims = (
-        a.join(
-            b,
-            (F.col("a.q_id") == F.col("b.q_id"))
-            & (F.col("a.n_id") != F.col("b.n_id")),
-        )
-        .select(
-            F.col("a.q_id").alias("q_id"),
-            F.col("a.n_id").alias("i"),
-            F.col("b.n_id").alias("j"),
-            F.round(
-                _dot("a.v", "b.v") / (_norm("a.v") * _norm("b.v")),
-                9,
-            ).alias("s"),
-        )
-        .localCheckpoint(eager=True)
+        "transform(c, a -> transform(c, b -> "
+        f"round({_dot_sql('a.v', 'b.v')} / (a.n * b.n), 9)))"
     )
-    flat = cand.select("q_id", "n_id", "rel")
-    w1 = W.partitionBy("q_id").orderBy(F.col("rel").desc(), F.col("n_id").asc())
-    sel = (
-        flat.withColumn("r", F.row_number().over(w1))
-        .filter(F.col("r") == 1)
-        .select("q_id", "n_id", "rel", F.col("rel").alias("score"),
-                F.lit(1).cast("long").alias("pick"))
+    score = (
+        f"IF(t = 1, c[i].rel, "
+        f"{MMR_LAMBDA!r}D * c[i].rel - {1 - MMR_LAMBDA!r}D * st[i].msim)"
     )
-    for t in range(2, MMR_K + 1):
-        remaining = flat.join(sel.select("q_id", "n_id"), ["q_id", "n_id"], "left_anti")
-        scored = (
-            remaining.join(
-                sims, (sims.q_id == remaining.q_id) & (sims.i == remaining.n_id)
-            )
-            .join(
-                sel.select(F.col("q_id").alias("sq"), F.col("n_id").alias("sj")),
-                (F.col("sq") == remaining.q_id) & (F.col("sj") == sims.j),
-            )
-            .groupBy(remaining.q_id, remaining.n_id, remaining.rel)
-            .agg(F.max("s").alias("msim"))
-            .select(
-                remaining.q_id,
-                remaining.n_id,
-                "rel",
-                (F.lit(MMR_LAMBDA) * F.col("rel")
-                 - F.lit(1 - MMR_LAMBDA) * F.col("msim")).alias("score"),
-            )
-        )
-        wt = W.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id").asc())
-        pick = (
-            scored.withColumn("r", F.row_number().over(wt))
-            .filter(F.col("r") == 1)
-            .select("q_id", "n_id", "rel", "score", F.lit(t).cast("long").alias("pick"))
-        )
-        # eager checkpoint is LOAD-BEARING, not just lineage-cost control:
-        # without it the next step's sel-vs-sims joins are ambiguous
-        # self-joins (AnalysisException) because sel still carries sims
-        # in its lineage
-        sel = sel.unionAll(pick).localCheckpoint(eager=True)
-    return sel.select(
-        "q_id", "pick", "n_id", F.round("rel", 6).alias("rel"),
-        F.round("score", 6).alias("score")
+    best = (
+        f"array_max(transform(filter({pos}, i -> st[i].pick = 0), "
+        f"i -> named_struct('score', {score}, 'neg', -i)))"
+    )
+    step = _let(
+        "b",
+        best,
+        "IF(b IS NULL, st, transform(st, (e, i) -> IF(i = -b.neg, "
+        "named_struct('msim', e.msim, 'pick', t, 'score', b.score), "
+        "named_struct('msim', greatest(e.msim, sim[i][-b.neg]), "
+        "'pick', e.pick, 'score', e.score))))",
+    )
+    init = (
+        "transform(c, x -> named_struct("
+        "'msim', CAST(NULL AS DOUBLE), 'pick', 0, 'score', CAST(NULL AS DOUBLE)))"
+    )
+    emit = (
+        f"transform(filter({pos}, i -> st[i].pick > 0), i -> named_struct("
+        "'pick', CAST(st[i].pick AS BIGINT), 'n_id', c[i].n_id, "
+        "'rel', round(c[i].rel, 6), 'score', round(st[i].score, 6)))"
+    )
+    greedy = f"aggregate(sequence(1, {MMR_K}), {init}, (st, t) -> {step}, st -> {emit})"
+    return cand.select(
+        "q_id",
+        F.inline(F.expr(_let("c", "array_sort(cs)", _let("sim", sims, greedy)))),
     )
 
 

@@ -45,168 +45,8 @@ from pb_etl_spark.operators import (
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Order matters: the driver's correctness harness verifies the FIRST ~50
-# registry entries (registry insertion order) each round. Cumulative
-# r01-r12: every registered name checked at least once, zero
-# latest-status hash-fails (CORRECTNESS_r12 = 50/50 green, no `err`
-# rows). Freshness bookkeeping is now SELF-CHECKING: tools/freshness.py
-# derives each name's latest-checked round from the committed
-# CORRECTNESS_r*.json records and tests/test_freshness_ledger.py
-# asserts the window below against it (r12 verdict item 4) — a
-# mis-transcribed name fails pytest instead of silently burning a slot.
-# The round-15 window:
-#   1. slots 0-17: the 18 one-action running-sum re-pins (r14 verdict
-#      item 1). global_positions / global_running_sum /
-#      grouped_running_sum no longer run an eager per-invocation counts
-#      job + driver collect that bakes offsets as plan literals; the
-#      offsets now ride the SAME single action as a bounded counts leg
-#      (per-partition count/min/max over the lazily-pinned
-#      range-partitioned frame), prefix-summed by windows over that
-#      ≤|partitions|(+|groups|)-row leg and broadcast-joined back on the
-#      partition id, span-guarded per row against boundary drift.
-#      Driver-side scalar totals became plan columns (_gp_tot /
-#      _gr_tot / gtot / _gr_all) with the consumers' integer arithmetic
-#      folded in-plan (identical integers). Every registered consumer's
-#      plan changes and rides the window: sprt_decision,
-#      quantile_normalize, shard_manifest, gini_by_group,
-#      gini_concentration, segment_migration, rfm_segments,
-#      abc_classification, weighted_median_by_group,
-#      grouped_quantiles_exact, window_ranking, seq_packing,
-#      top_p_quality_sample, deterministic_shuffle, curriculum_buckets,
-#      exact_stratified_split, pps_systematic_sample,
-#      grouped_running_revenue.
-#   1b. slots 18-24: the keyed-repartition re-pins (r15): the guarded
-#      pre-explode/pre-codec rebalances in ddsketch_quantiles,
-#      q_fuzzy_match_pairs (feeding entity_resolution and
-#      entity_golden_record) and xml_roundtrip_agg now hash-partition
-#      on a deterministic unique key instead of round-robin — a
-#      keyless repartition(n) pays a local sort of its whole input for
-#      retry determinism (SPARK-23207); hashing a unique key needs no
-#      sort and stays deterministic under retries. Plus the minhash
-#      expr-scaffold re-pins: the 16
-#      signature aggregates now parse from one F.expr each (analysis-
-#      identical, pinned by test) and the band digest concat is
-#      flattened (value-identical by associativity) — the band plan
-#      changes, so both registered faces ride the window.
-#   2. slots 25-46: the 22 r07-stale leftovers, alphabetical (after
-#      these, nothing oracle-backed is staler than r08).
-#   3. slots 47-49: the first 3 r08-stale names, alphabetical.
-# Deliberately NOT staged, ever (r08 verdict item 3): approx_distinct,
-# approx_percentiles, hll_mergeable_counts, stratified_sample — the 4
-# oracle-less sketch/RNG names whose driver check can only report
-# `err: no_oracle`; their hash-checked deterministic twins
-# (kmv_distinct_sketch / bitmap_distinct_counts, ddsketch_quantiles,
-# stratified_hash_sample) carry the correctness evidence instead
-# (exemption pinned by tests/test_freshness_ledger.py).
-
-# The driver round this window is staged FOR: the ledger tests evaluate
-# _PRIORITY against CORRECTNESS records STRICTLY OLDER than this round,
-# so pytest stays green after the driver drops CORRECTNESS_r14.json
-# (r13 verdict item 3 — previously the post-round record turned the
-# ledger red until the next round's first commit). One newer record is
-# tolerated with a warning naming it; two means a round went by without
-# restaging, which fails.
-_STAGED_FOR = 15
-
-_PRIORITY = [
-    # -- slots 0-17: one-action running-sum re-pins --
-    "sprt_decision",
-    "quantile_normalize",
-    "shard_manifest",
-    "gini_by_group",
-    "gini_concentration",
-    "segment_migration",
-    "rfm_segments",
-    "abc_classification",
-    "weighted_median_by_group",
-    "grouped_quantiles_exact",
-    "window_ranking",
-    "seq_packing",
-    "top_p_quality_sample",
-    "deterministic_shuffle",
-    "curriculum_buckets",
-    "exact_stratified_split",
-    "pps_systematic_sample",
-    "grouped_running_revenue",
-    # -- slots 18-24: keyed-repartition + minhash re-pins --
-    "ddsketch_quantiles",
-    "fuzzy_match_pairs",
-    "entity_resolution",
-    "entity_golden_record",
-    "xml_roundtrip_agg",
-    "minhash_signatures",
-    "minhash_near_dup_pairs",
-    # -- slots 25-46: the 22 r07-stale leftovers --
-    "new_vs_returning_daily",
-    "not_exists_correlated",
-    "null_handling",
-    "null_safe_join",
-    "oov_rate",
-    "orc_roundtrip_agg",
-    "parameterized_sql_agg",
-    "partial_agg_merge",
-    "percentiles",
-    "pivot_agg",
-    "pq_codes",
-    "regex_funcs",
-    "roc_curve_points",
-    "snapshot_diff",
-    "sql_table_udf_agg",
-    "stats_aggs",
-    "string_funcs",
-    "struct_funcs",
-    "supplier_reliability",
-    "training_set_assembly",
-    "try_funcs",
-    "zorder_key",
-    # -- slots 47-49: the first 3 r08-stale names --
-    "anti_join",
-    "bitmap_distinct_counts",
-    "collect_agg",
-]
-
-# Machine-readable staging annotation (consumed by
-# tests/test_freshness_ledger.py): the window entries staged for
-# PLAN-CHANGE / NEW-CODE reasons rather than staleness. Every other
-# _PRIORITY slot must be exactly the oldest-first (staleness, name)
-# prefix of the non-repin oracle-backed names — so a mis-transcribed
-# stale name anywhere in the window (not just the oldest cohort) fails
-# pytest. Reset this set each round when restaging.
-_REPINS = {
-    # r15 one-action running-sum reformulation (corpus.global_positions
-    # / global_running_sum / grouped_running_sum — every registered
-    # consumer, direct or via affinity.exact_quintile):
-    "sprt_decision",
-    "quantile_normalize",
-    "shard_manifest",
-    "gini_by_group",
-    "gini_concentration",
-    "segment_migration",
-    "rfm_segments",
-    "abc_classification",
-    "weighted_median_by_group",
-    "grouped_quantiles_exact",
-    "window_ranking",
-    "seq_packing",
-    "top_p_quality_sample",
-    "deterministic_shuffle",
-    "curriculum_buckets",
-    "exact_stratified_split",
-    "pps_systematic_sample",
-    "grouped_running_revenue",
-    # r15 minhash expr-scaffold (band-digest concat flattening — the
-    # aggregate expressions are analysis-identical, but the band plan
-    # changes):
-    "minhash_signatures",
-    "minhash_near_dup_pairs",
-    # r15 keyed repartitions (round-robin -> deterministic-key hash):
-    "ddsketch_quantiles",
-    "fuzzy_match_pairs",
-    "entity_resolution",
-    "entity_golden_record",
-    "xml_roundtrip_agg",
-}
-
+# Registry order is the fixed _MODULES order below, then each module's
+# QUERIES insertion order.
 _MODULES = [
     affinity,
     governance,
@@ -246,12 +86,7 @@ def all_queries() -> dict[str, QueryFn]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(m.QUERIES)
-    missing = [q for q in _PRIORITY if q not in merged]
-    if missing:
-        raise ValueError(f"priority entries not registered: {missing}")
-    out: dict[str, QueryFn] = {q: merged[q] for q in _PRIORITY}
-    out.update(merged)  # dict preserves first-insertion order for dupes
-    return out
+    return merged
 
 
 def all_oracles() -> dict[str, str]:

@@ -145,22 +145,6 @@ def test_bench_anchor_excuse_requires_tracking_floor(tmp_path, capsys):
     assert rc != 0
 
 
-def test_registry_priority_window_shape():
-    """The driver verifies the FIRST ~50 registry entries each round;
-    the staged window must stay exactly 50 unique registered names so a
-    later edit cannot silently shrink or duplicate it, and every name
-    must carry an oracle (oracle-less names are deliberately never
-    staged — their driver check can only report err: no_oracle)."""
-    from pb_etl_spark.registry import _PRIORITY, all_oracles, all_queries
-
-    qs, os_ = all_queries(), all_oracles()
-    assert len(_PRIORITY) == 50
-    assert len(set(_PRIORITY)) == 50
-    assert all(n in qs for n in _PRIORITY)
-    assert all(n in os_ for n in _PRIORITY), [n for n in _PRIORITY if n not in os_]
-    assert list(qs)[:50] == _PRIORITY
-
-
 def test_bench_hl_crc_rejects_zeroed_field():
     """ADVICE r13: crc32(b'') == 0, so a zeroed/corrupt 'hl' used to
     pass the reorder guard as "the empty prefix" — only prefixes long

@@ -32,6 +32,8 @@ BNLJ_WHITELIST = {
     #   label-mismatch predicate rides the same one-corpus-scan shape
     "matryoshka_knn",  # same 5-row broadcast query set; coarse stage is
     #   the one corpus scan, re-rank touches only top-MAT_CAND candidates
+    "mmr_diverse_topk",  # same 5-row query set broadcast vs corpus by
+    #   cosine_topk; the greedy re-rank runs on ≤MMR_CAND rows per query
     "tpch_q22_idle_balances",  # 1-row scalar-subquery crossJoin
     "tpch_q11_important_parts",  # 1-row scalar-subquery crossJoin
     "maxabs_normalize",  # 1-row global-aggregate crossJoin (fit constants)

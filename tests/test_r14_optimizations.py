@@ -101,28 +101,6 @@ def test_pair_build_width_is_work_proportional(spark):
         spark.conf.set(key, prev)
 
 
-# ------------------------------------------------- id-indexed array literal
-def test_id_indexed_array_sql_gaps_and_lookup(spark):
-    from pb_etl_spark.operators.insights import _id_indexed_array_sql
-
-    sql = _id_indexed_array_sql({0: 7, 2: 9})
-    assert sql == "array(7L,CAST(NULL AS BIGINT),9L)"
-    rows = (
-        spark.range(4)
-        .select(F.get(F.expr(sql), F.col("id").cast("int")).alias("v"))
-        .collect()
-    )
-    # gap id → NULL, out-of-bounds id → NULL (F.get, not ANSI arr[i])
-    assert [r["v"] for r in rows] == [7, None, 9, None]
-    # ADVICE r14: the empty slice pins the element type (bare array()
-    # would type as ARRAY<VOID> and silently change the lookup column)
-    assert _id_indexed_array_sql({}) == "CAST(array() AS ARRAY<BIGINT>)"
-    empty = spark.range(1).select(
-        F.get(F.expr(_id_indexed_array_sql({})), F.lit(0)).alias("v")
-    )
-    assert dict(empty.dtypes)["v"] == "bigint"
-
-
 # ---------------------------------------------------------------- cache.py
 def test_swap_persist_materialize_builds_cache_upfront(spark):
     from pb_etl_spark.cache import _CACHE_SWAP, swap_persist

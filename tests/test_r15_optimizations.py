@@ -90,17 +90,3 @@ def test_minhash_expr_scaffold_is_expression_identical(spark):
     ) or sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
     # and the values certainly agree
     assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
-
-
-def test_literal_state_bound_refuses_oversized_slices():
-    """r14 verdict item 4: the driver-bounded graph loops must refuse to
-    carry literal state for slices that outgrow their compile-time
-    bound, pointing at the distributed formulation."""
-    import pytest
-
-    from pb_etl_spark.operators.insights import _assert_literal_state_bound
-
-    _assert_literal_state_bound(200, 200, "x")  # at the bound: fine
-    _assert_literal_state_bound(800, 200, "x")  # 4x: still fine
-    with pytest.raises(ValueError, match="literal-state bound"):
-        _assert_literal_state_bound(801, 200, "x")
