@@ -1,36 +1,41 @@
-"""Swap-persist: the engine's one-live-cache-per-query discipline.
+"""One cache lifecycle: a pinned frame lives for exactly one query invocation.
 
-Several operators materialize a derived frame that multiple plan legs
-consume (RFM's keyed base, the shingle table, the allocation aggregate).
-A bare ``.persist()`` per invocation would accumulate one cached copy per
-driver/bench run; swap-persist keeps exactly ONE live copy per key by
-unpersisting the previous invocation's frame (whose action has completed
-by the time a new plan is built) before persisting the new one.
+Some operators read one derived frame from several plan legs (RFM's
+keyed base, the shingle table, the range-partitioned frame behind the
+running sums). ``pin(df)`` persists such a frame and records it under
+its SparkSession; ``release(spark)`` unpersists everything recorded for
+that session. ``registry.all_queries()`` wraps every query function so
+that each invocation begins with ``release``. A pin is therefore
+dropped at the start of the NEXT invocation, not at the end of its own:
+the caller's action runs after the query function has returned.
 
-Promoted out of ``operators/affinity.py`` (round-8 review): three operator
-modules consume it, so it is shared infrastructure, not an affinity
-detail.
+Caveat: acting on a query's frame after a later registry call recomputes
+its pinned frames. For the running-sum consumers that recomputation
+resamples the range boundaries and the span guard raises loudly. Build,
+then act, before the next query is built.
+
+``localCheckpoint`` is used instead of a pin where the frame must be cut
+off from its lineage: a loop that would otherwise grow its plan every
+round, a nondeterministic column that must be frozen before the plan
+branches, or a frame that feeds a driver-side collect while the plan is
+built.
 """
 
 from __future__ import annotations
 
-_CACHE_SWAP: dict[str, object] = {}
+from weakref import WeakKeyDictionary
+
+from pyspark.sql import DataFrame, SparkSession
+
+_PINNED: "WeakKeyDictionary[SparkSession, list[DataFrame]]" = WeakKeyDictionary()
 
 
-def swap_persist(key: str, df, materialize: bool = False):
-    """``materialize=True`` runs one count() so the cache is BUILT before
-    the caller's plan legs read it: when several concurrent stages of one
-    action consume a lazily-persisted frame, each stage misses the not-
-    yet-built cache and recomputes the whole subtree in parallel (r14
-    profile of shingle_containment_pairs: SIX concurrent 2 s jobs all
-    computing the same explode+distinct). One upfront pass costs a job;
-    N racing recomputations cost N-1 wasted ones. Leave False when the
-    frame has a single consumer leg (the count would be pure overhead)."""
-    prev = _CACHE_SWAP.pop(key, None)
-    if prev is not None:
-        prev.unpersist()
+def pin(df: DataFrame) -> DataFrame:
     out = df.persist()
-    if materialize:
-        out.count()
-    _CACHE_SWAP[key] = out
+    _PINNED.setdefault(df.sparkSession, []).append(out)
     return out
+
+
+def release(spark: SparkSession) -> None:
+    for df in _PINNED.pop(spark, []):
+        df.unpersist()

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table, register_views
 from pb_etl_spark.operators import money
 
@@ -1367,16 +1368,11 @@ def q_largest_remainder_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row totals frame rides a broadcast crossJoin (the
     maxabs_normalize pattern) and the remainder rank is a window over
     the ≤|nations| aggregate — bounded by construction. The ≤|nations|
-    aggregate is swap-persisted: the totals, leftover, and final legs
-    all consume it, and without the persist each leg re-runs the full
-    fact scan + count (plan audit showed 4 customer scans)."""
-    from pb_etl_spark.cache import swap_persist as _swap_persist
-
+    aggregate is pinned: the totals, leftover, and final legs all
+    consume it, and without the pin each leg re-runs the full fact
+    scan + count (plan audit showed 4 customer scans)."""
     cust = read_table(spark, sf_dir, "customer")
-    per = _swap_persist(
-        "largest_remainder_alloc.per",
-        cust.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_cust")),
-    )
+    per = pin(cust.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_cust")))
     totals = per.agg(F.sum("n_cust").alias("_t"))
     scored = per.crossJoin(F.broadcast(totals)).select(
         "c_nationkey",

@@ -38,11 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table
-
-# one live cache per query — shared engine discipline, see
-# pb_etl_spark/cache.py (promoted there once three modules consumed it)
-from pb_etl_spark.cache import swap_persist as _swap_persist
 
 # association-rule knobs: brand-level items, 1% minimum support
 # (integer cross-multiplied in both engines — no double threshold compare)
@@ -96,13 +93,12 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this relation's size, not the raw lineitem count. Four subtrees
     # consume it (pair sides a/b, item counts, basket total) — at
     # fixture scale recomputing the cheap join+distinct beats cache
-    # materialization (r08: 2.1 s vs 2.6 s persisted; r14 re-tested the
-    # materialize=True upfront-build variant that fixed the shingle
-    # race: one isolated A/B favored it (2.5 vs 3.1 s) but the full
-    # warm bench showed +0.9 s and repeat A/Bs under load were a wash —
-    # the racing recomputes overlap on idle cores here, so the upfront
-    # pass serializes more than it saves). At 100 TB flip to
-    # .persist(StorageLevel.DISK_ONLY) so the corpus is scanned once
+    # materialization (r08: 2.1 s vs 2.6 s persisted; r14 re-tested an
+    # upfront-count build like the shingle table's: one isolated A/B
+    # favored it (2.5 vs 3.1 s) but the full warm bench showed +0.9 s
+    # and repeat A/Bs under load were a wash — the racing recomputes
+    # overlap on idle cores here, so the upfront pass serializes more
+    # than it saves). At 100 TB pin it so the corpus is scanned once
     # instead of four times.
     baskets = (
         li.join(part, li.l_partkey == part.p_partkey)
@@ -165,18 +161,17 @@ def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # persist: the interaction matrix feeds both self-join sides and the
+    # pinned: the interaction matrix feeds both self-join sides and the
     # norms — three consumers, one computation (plan_audit-caught)
-    v = _swap_persist(
-        "item_item_v",
+    # deliberately LAZY (no upfront count): A/B'd r14 — with only three
+    # consumer legs the racing recomputations overlap on idle cores and
+    # the critical path stays ~one build, while an upfront count()
+    # serializes build-then-legs (+0.2 s at sf0.1)
+    v = pin(
         li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(F.col("o_custkey").alias("cust"), F.col("p_type").alias("item"))
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("w")),
-        # deliberately LAZY (no materialize): A/B'd r14 — with only
-        # three consumer legs the racing recomputations overlap on idle
-        # cores and the critical path stays ~one build, while an
-        # upfront count() serializes build-then-legs (+0.2 s at sf0.1)
+        .agg(F.sum(F.col("l_quantity").cast("long")).alias("w"))
     )
     norms = v.groupBy("item").agg(F.sum(F.col("w") * F.col("w")).alias("nrm2"))
     a, b = v.alias("a"), v.alias("b")
@@ -224,10 +219,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "o_orderdate", "o_totalprice"
     )
     mx = orders.select(F.max("o_orderdate").alias("mxd"))
-    # persist: three quintile scorers + the final join all consume the
+    # pinned: three quintile scorers + the final join all consume the
     # per-customer aggregate — one computation, not four
-    rfm = _swap_persist(
-        "rfm_base",
+    rfm = pin(
         orders.crossJoin(F.broadcast(mx))
         .groupBy(F.col("o_custkey").alias("c"))
         .agg(

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
-from pb_etl_spark.cache import swap_persist
+from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table
 from pb_etl_spark.operators.text import STOPWORDS
 
@@ -414,7 +414,7 @@ def _pid_pinned(df: DataFrame, nparts: int, key_cols: list[str]) -> DataFrame:
     """Range-partition on ``key_cols``, LAZILY pin the result, and tag
     each row with its partition id.
 
-    The persist is load-bearing, not a cache-for-speed: the counts leg
+    The pin is load-bearing, not a cache-for-speed: the counts leg
     and the output leg below both branch from this frame, and WITHOUT a
     pinned materialization they are two independent instantiations —
     ``spark_partition_id()`` is a nondeterministic expression, so the
@@ -433,19 +433,12 @@ def _pid_pinned(df: DataFrame, nparts: int, key_cols: list[str]) -> DataFrame:
     span guard downstream stays as insurance — any inconsistency is a
     loud error, never silent corruption.
 
-    The persist is LAZY — no job, no collect runs here (r14 verdict
+    The pin is LAZY — no job, no collect runs here (r14 verdict
     item 1: the per-invocation counts job + driver round-trip is what
     the r15 reformulation removed); the consumer's single action
-    materializes it. Deliberately a bare persist, not cache.swap_persist
-    (r08 adjudication, unchanged): a call-site swap key could evict a
-    sibling invocation mid-build (segment_migration builds two same-key
-    quintiles into one joined query). The leak is one bounded frame per
-    invocation, reclaimed at session end; at deployment scale flip the
-    storage level to DISK_ONLY if executor memory is contended."""
-    return (
-        df.repartitionByRange(nparts, *key_cols)
-        .persist()
-        .withColumn("_rs_pid", F.spark_partition_id())
+    materializes it."""
+    return pin(df.repartitionByRange(nparts, *key_cols)).withColumn(
+        "_rs_pid", F.spark_partition_id()
     )
 
 
@@ -453,7 +446,7 @@ def _drift_raise(label: str, key_expr):
     """A broadcast-back offset/total is only trusted when the row's
     range key falls inside ITS partition's counts-leg span (r15: the
     offsets now ride the SAME one-action plan instead of driver-side
-    literals). Both legs read the one lazily-persisted range-partitioned
+    literals). Both legs read the one lazily pinned range-partitioned
     frame (see ``_pid_pinned`` for why the pin is load-bearing), so the
     guard never fires in a healthy plan; if the legs ever saw different
     layouts, any row whose partition assignment differs lands outside
@@ -945,7 +938,6 @@ def priority_sample(
     weight_col: str,
     priority_col: str,
     k: int,
-    cache_key: str,
 ) -> DataFrame:
     """Shared exact-K sampling core: given a frame with an integer id, a
     weight, and a precomputed ``priority`` column, return the top-``k``
@@ -953,16 +945,13 @@ def priority_sample(
     weight ``est_w`` = max(weight, τ), τ = the (k+1)-th priority (0 when
     the frame has ≤ k rows, i.e. the whole population is the sample).
 
-    One TakeOrderedAndProject(k+1) materializes the candidate frame
-    (swap-persisted under ``cache_key``); the boundary row is found by a
-    1-row MIN(struct(priority, -id)) aggregate and the kept rows are the
-    ones strictly above it under the same total order the sort used —
+    One TakeOrderedAndProject(k+1) materializes the candidate frame,
+    which is pinned; the boundary row is found by a 1-row
+    MIN(struct(priority, -id)) aggregate and the kept rows are the ones
+    strictly above it under the same total order the sort used —
     deterministic even under exact priority ties."""
-    top = swap_persist(
-        cache_key,
-        df.orderBy(F.col(priority_col).desc(), F.col(id_col).asc()).limit(
-            k + 1
-        ),
+    top = pin(
+        df.orderBy(F.col(priority_col).desc(), F.col(id_col).asc()).limit(k + 1)
     )
     last_struct = F.struct(
         F.col(priority_col).alias("p"), (-F.col(id_col)).alias("nid")
@@ -1023,9 +1012,7 @@ def q_priority_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             w_tok.cast("double") * F.lit(float(1 << 32)) / m1.cast("double")
         ).alias("priority"),
     )
-    return priority_sample(
-        d, "doc_id", "n_tok", "priority", PRIORITY_K, "priority_sample_topk.top"
-    ).select(
+    return priority_sample(d, "doc_id", "n_tok", "priority", PRIORITY_K).select(
         "doc_id",
         "n_tok",
         F.round("priority", 6).alias("priority"),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table
 
 # Shuffle width for this module's explode / bucket-verify repartitions
@@ -147,21 +148,16 @@ def q_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ|bucket|² both-sides; at 100 TB the join key becomes the
     xxhash64(shingle) digest like ``dup_span_ratio`` documents. The
     shingle table feeds four plan legs (prefix rank, candidate probe,
-    two verify sides) — persist it once per invocation (swap-persist,
-    pb_etl_spark/cache.py) instead of re-running the explode+
-    distinct 4×; at 100 TB this is the standard materialize-the-
-    fingerprint-table step every near-dup pipeline shares."""
-    from pb_etl_spark.cache import swap_persist as _swap_persist
-
-    sh = _swap_persist(
-        "shingle_containment_pairs.sh",
-        word_shingles(read_table(spark, sf_dir, "documents")),
-        # materialize: four plan legs consume sh CONCURRENTLY in the one
-        # consuming action — lazily persisted, each leg's stage missed
-        # the unbuilt cache and recomputed the whole explode+distinct
-        # (six racing ~2 s jobs in the r14 profile)
-        materialize=True,
-    )
+    two verify sides) — it is pinned for the invocation instead of
+    re-running the explode+distinct 4×; at 100 TB this is the standard
+    materialize-the-fingerprint-table step every near-dup pipeline
+    shares."""
+    sh = pin(word_shingles(read_table(spark, sf_dir, "documents")))
+    # build the pin upfront: four plan legs consume sh CONCURRENTLY in
+    # the one consuming action — lazily pinned, each leg's stage missed
+    # the unbuilt cache and recomputed the whole explode+distinct (six
+    # racing ~2 s jobs in the r14 profile)
+    sh.count()
     cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     df_ = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     w = W.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("sh").asc())
@@ -227,7 +223,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     # one-parse F.expr per aggregate (r14 §4 pattern): the nested Column
     # builders cost ~7 py4j roundtrips per hash × 16 hashes per BUILD;
     # the SQL text parses each in one. Expression identity with the old
-    # Column form is pinned by tests/test_r15_optimizations.py.
+    # Column form is pinned by tests/test_dedup_semantics.py.
     aggs = [
         F.expr(
             f"min(substring(md5(concat('{i // 4}:', sh)), {(i % 4) * 8 + 1}, 8))"
@@ -261,11 +257,11 @@ def q_minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The band join is the scale path — no shingle self-join, no O(n²)."""
     # the signature relation feeds THREE subtrees (band explode + both
     # re-rank join sides); Spark has no cross-join CSE, so without a
-    # persist the whole shingle->minhash pipeline runs 3x. Signatures are
+    # pin the whole shingle->minhash pipeline runs 3x. Signatures are
     # 16 longs + id per doc — orders of magnitude smaller than the
     # shingle explode that builds them, so caching them is the scale
     # choice too (MEMORY_AND_DISK default; LRU-evictable).
-    sig = minhash_signatures(read_table(spark, sf_dir, "documents")).persist()
+    sig = pin(minhash_signatures(read_table(spark, sf_dir, "documents")))
     bands = sig.select(
         "doc_id",
         F.explode(
@@ -811,7 +807,7 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: windows are generated JVM-side (sequence+transform+
     posexplode — a flatMap, no shuffle) and immediately reduced to
     ``xxhash64(window)`` — the shuffle/join payload is 8 bytes per
-    window, not the 8-token text, and the window frame is PERSISTED once
+    window, not the 8-token text, and the window frame is PINNED once
     for its two consumers (repeat-finding agg + profile agg) instead of
     re-running the explode. Grouping on the hash gives the same dup
     flags as grouping on the text modulo a 64-bit collision among the
@@ -830,7 +826,7 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k + 1) for k in range(SPAN_W)]),
     )
     n_parts = _fanout_width(spark)
-    g = (
+    g = pin(
         doc.filter(F.size(toks) >= SPAN_W)
         .repartition(n_parts, "doc_id")
         .select("doc_id", F.posexplode(grams).alias("pos0", "gram"))
@@ -839,7 +835,6 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("pos0") + 1).alias("pos"),
             F.xxhash64("gram").alias("gram_h"),
         )
-        .persist()
     )
     dup_grams = (
         g.groupBy("gram_h")

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table
 from pb_etl_spark.operators._width import core_count, fanout_width
 
@@ -483,15 +484,18 @@ def q_kmv_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = F.conv(F.substring(F.md5("tok"), 1, 13), 16, 10).cast("long")
     hu = tok.select("source", u.alias("u")).distinct()
     w = W.partitionBy("source").orderBy("u")
-    kept = (
+    kept = pin(  # feeds pair build + both tag branches
         hu.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= KMV_JACCARD_K)
         .select("source", "u")
-        .persist()  # feeds pair build + both tag branches
     )
     srcs = kept.select("source").distinct()
+    # the hint fixes the |sources|-row build side: chosen by AQE at run
+    # time, it followed whichever stage finished first, and the plan
+    # (13 or 15 jobs at sf0.001) varied between identical invocations
     pairs = srcs.select(F.col("source").alias("sa")).join(
-        srcs.select(F.col("source").alias("sb")), F.col("sa") < F.col("sb")
+        F.broadcast(srcs.select(F.col("source").alias("sb"))),
+        F.col("sa") < F.col("sb"),
     )
     tag_a = pairs.join(kept.withColumnRenamed("source", "sa"), "sa").select(
         "sa", "sb", "u", F.lit(1).alias("in_a"), F.lit(0).alias("in_b")

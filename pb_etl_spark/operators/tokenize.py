@@ -113,18 +113,9 @@ def learn_bpe_merges(
     return merges
 
 
-# the trainer is deterministic per (corpus slice, n_merges): memoize so
-# the encode query (and any harness touching both registered queries)
-# does not replay the 15-iteration driver loop
-_MERGE_CACHE: dict[tuple[str, int], list[tuple[str, str, int]]] = {}
-
-
-def _merges_for(spark: SparkSession, sf_dir: str, n_merges: int = N_MERGES):
-    key = (sf_dir.rstrip("/"), n_merges)
-    if key not in _MERGE_CACHE:
-        docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-        _MERGE_CACHE[key] = learn_bpe_merges(spark, docs, n_merges)
-    return _MERGE_CACHE[key]
+def _merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    return learn_bpe_merges(spark, docs)
 
 
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

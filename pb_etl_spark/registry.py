@@ -8,10 +8,12 @@ are rounded identically on both sides.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pb_etl_spark.cache import release
 from pb_etl_spark.sources import pyds
 from pb_etl_spark.operators import (
     advanced,
@@ -79,6 +81,18 @@ _MODULES = [
 ]
 
 
+def _released(fn: QueryFn) -> QueryFn:
+    """Every invocation first drops the frames the previous one pinned
+    (see pb_etl_spark/cache.py)."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release(spark)
+        return fn(spark, sf_dir)
+
+    return run
+
+
 def all_queries() -> dict[str, QueryFn]:
     merged: dict[str, QueryFn] = {}
     for m in _MODULES:
@@ -86,7 +100,7 @@ def all_queries() -> dict[str, QueryFn]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(m.QUERIES)
-    return merged
+    return {name: _released(fn) for name, fn in merged.items()}
 
 
 def all_oracles() -> dict[str, str]:

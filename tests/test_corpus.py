@@ -189,3 +189,24 @@ def test_curriculum_buckets_matches_exact_ntile(spark):
         for r in ref.collect()
     }
     assert got == want
+
+
+def test_running_sum_totals_ride_as_columns(spark):
+    """r15 one-action primitives: the totals the old API returned as
+    Python ints must be present per row and constant."""
+    from pb_etl_spark.operators.corpus import (
+        global_positions,
+        global_running_sum,
+        grouped_running_sum,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 1, 2), ("a", 2, 3), ("b", 3, 5)], "g string, o long, v long"
+    )
+    pos = global_positions(spark, df, ["o"]).collect()
+    assert {r["_gp_tot"] for r in pos} == {3}
+    cum = global_running_sum(spark, df, ["o"], "v").collect()
+    assert {r["_gr_tot"] for r in cum} == {10}
+    grs = grouped_running_sum(spark, df, ["g"], ["o"], "v").collect()
+    assert {r["_gr_all"] for r in grs} == {10}
+    assert {(r["g"], r["gtot"]) for r in grs} == {("a", 5), ("b", 5)}

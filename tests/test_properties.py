@@ -268,7 +268,7 @@ def test_priority_sample_equals_python_model(spark, rows, k):
 
     data = [(i, w, float(p)) for i, (w, p) in enumerate(rows)]
     df = spark.createDataFrame(data, "id long, w long, priority double")
-    out = priority_sample(df, "id", "w", "priority", k, "prop.priority_sample")
+    out = priority_sample(df, "id", "w", "priority", k)
     got = {r["id"]: (r["w"], r["priority"], r["est_w"]) for r in out.collect()}
     model = sorted(data, key=lambda t: (-t[2], t[0]))
     tau = model[k][2] if len(model) > k else 0.0

@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
@@ -131,3 +132,28 @@ def test_stateful_user_totals(spark, events_dir):
     for k, (n, t) in bdata.items():
         assert sdata[k][0] == n
         assert abs(sdata[k][1] - t) < 1e-6
+
+
+def test_run_to_memory_state_partitions_override_and_restore(spark):
+    import pandas as pd
+
+    from pb_etl_spark.streaming.windows import run_to_memory
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    pdf = pd.DataFrame({"k": ["a", "b", "a"], "v": [1, 2, 3]})
+    src_dir = "/tmp/r14_stream_src"
+    shutil.rmtree(src_dir, ignore_errors=True)
+    spark.createDataFrame(pdf).write.parquet(src_dir)
+    sdf = (
+        spark.readStream.schema("k string, v bigint").parquet(src_dir)
+        .groupBy("k")
+        .agg(F.sum("v").alias("s"))
+    )
+    out = run_to_memory(
+        sdf, "r14_state_override", output_mode="complete", state_partitions=3
+    )
+    got = {r["k"]: r["s"] for r in out.collect()}
+    assert got == {"a": 4, "b": 2}
+    # the caller's conf must be restored whatever width the drain pinned
+    assert spark.conf.get(key) == prev

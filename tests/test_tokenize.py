@@ -4,6 +4,7 @@ a rows-only registered query needs."""
 
 from __future__ import annotations
 
+import shutil
 from collections import Counter
 
 from pyspark.sql import functions as F
@@ -71,3 +72,33 @@ def test_bpe_encode_compresses_and_bounds(spark):
     assert all(r.bpe_tokens <= r.char_tokens for r in out)
     assert any(r.bpe_tokens < r.char_tokens for r in out)
     assert all(0 < r.compression <= 1 for r in out)
+
+
+def test_bpe_train_merges_follows_a_regenerated_corpus(spark, tmp_path):
+    """The merge table is learned on every invocation: after
+    ``documents`` is regenerated in place, the registered query returns
+    the new corpus's table, not the old one."""
+    from pb_etl_spark.operators.tokenize import N_MERGES
+    from pb_etl_spark.registry import all_queries
+
+    train = all_queries()["bpe_train_merges"]
+    docs_path = tmp_path / "documents.parquet"
+    shutil.copyfile(f"{SF_DIR}/documents.parquet", docs_path)
+    first = train(spark, str(tmp_path)).orderBy("rank").collect()
+
+    out = tmp_path / "reversed"
+    (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .withColumn("text", F.reverse("text"))
+        .coalesce(1)
+        .write.parquet(str(out))
+    )
+    shutil.copyfile(next(out.glob("part-*.parquet")), docs_path)
+    got = [
+        (r.left, r.right, r.pair_count)
+        for r in train(spark, str(tmp_path)).orderBy("rank").collect()
+    ]
+
+    docs = spark.read.parquet(str(docs_path)).filter(F.col("doc_id") < 200)
+    want = _python_bpe({r.w: r.n for r in word_vocab(docs).collect()}, N_MERGES)
+    assert got == want, f"\nfirst: {first}\nspark: {got}\npython: {want}"

@@ -243,3 +243,20 @@ def test_k_core_is_a_fixpoint_within_round_budget(spark):
             assert r.core_degree >= KC_K, r
         else:
             assert not r.in_core
+
+
+def test_dot_norm_string_form_is_bit_identical_to_column_form(spark):
+    from pb_etl_spark.operators.similarity import _dot, _norm
+
+    df = spark.createDataFrame(
+        [([1.5, -2.25, 3.0], [0.5, 4.0, -1.125])],
+        "a array<double>, b array<double>",
+    )
+    row = df.select(
+        _dot("a", "b").alias("ds"),
+        _dot(F.col("a"), F.col("b")).alias("dc"),
+        _norm("a").alias("ns"),
+        _norm(F.col("a")).alias("nc"),
+    ).collect()[0]
+    assert row["ds"] == row["dc"]  # bit-equal doubles, same fold order
+    assert row["ns"] == row["nc"]

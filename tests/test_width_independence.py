@@ -56,3 +56,26 @@ def test_converted_fanout_is_width_independent(spark, module, name):
         spark.conf.set(key, prev)
     assert results["8"] == results["64"] == results["200"]
     assert results["8"], f"{name} must return rows on the fixture"
+
+
+def test_pair_build_width_is_work_proportional(spark):
+    from pb_etl_spark.operators._width import (
+        bounded_fanout_width,
+        pair_build_width,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "2000")
+        # 200-node slice: 40k pairs / 5k per task = 8 — NOT the 2000-wide
+        # deployment knob (empty-task storm) and NOT the 200-row cap
+        assert pair_build_width(spark, 200) == 8
+        # a tiny slice's pair work fits one task
+        assert pair_build_width(spark, 4) == 1
+        assert bounded_fanout_width(spark, 200) == 200
+        spark.conf.set(key, "4")
+        # floor: never below 1, never above the deployment-derived width
+        assert 1 <= pair_build_width(spark, 1) <= 4
+    finally:
+        spark.conf.set(key, prev)
