@@ -5,10 +5,10 @@ Re-expresses the reference's TF feature-column + Keras path as a Spark ML
 distributed scoring are engine-native:
 
 - M1 numeric features  -> VectorAssembler over num_col (tasks.py:275-276)
-- M2 categorical one-hot -> StringIndexer(handleInvalid="keep") + OneHotEncoder
-  per categorical. The reference's loop quirk only encodes the LAST
-  categorical (tasks.py:278-288); we encode all 10 as its README declares —
-  documented divergence (SURVEY.md §2.6).
+- M2 categorical one-hot -> one multi-column StringIndexer(handleInvalid="keep")
+  + OneHotEncoder over all categoricals. The reference's loop quirk only
+  encodes the LAST categorical (tasks.py:278-288); we encode all 10 as its
+  README declares — documented divergence (SURVEY.md §2.6).
 - M3 train/val split   -> df.randomSplit([0.8, 0.2], seed) (tasks.py:290)
 - M5 training          -> LogisticRegression (binary, sigmoid probability
   output — rate-level parity with the unseeded Keras net, tasks.py:300-332;
@@ -44,34 +44,24 @@ def build_pipeline(
     vocabulary-list encoding would OOV them to zeros — same spirit)."""
     cat_cols = CAT_COLS if cat_cols is None else cat_cols
     num_cols = NUM_COLS if num_cols is None else num_cols
-    stages = []
-    for c in cat_cols:
-        stages.append(
-            StringIndexer(inputCol=c, outputCol=f"{c}__idx", handleInvalid="keep")
-        )
-    stages.append(
-        OneHotEncoder(
-            inputCols=[f"{c}__idx" for c in cat_cols],
-            outputCols=[f"{c}__oh" for c in cat_cols],
-            handleInvalid="keep",
-        )
-    )
-    stages.append(
+    # one multi-column indexer fits every vocabulary in one job and
+    # saves/loads as one stage, where an indexer per column costs a fit
+    # job and its own save/load jobs per column
+    idx_cols = [f"{c}__idx" for c in cat_cols]
+    oh_cols = [f"{c}__oh" for c in cat_cols]
+    return Pipeline(stages=[
+        StringIndexer(inputCols=cat_cols, outputCols=idx_cols, handleInvalid="keep"),
+        OneHotEncoder(inputCols=idx_cols, outputCols=oh_cols, handleInvalid="keep"),
         VectorAssembler(
-            inputCols=num_cols + [f"{c}__oh" for c in cat_cols],
-            outputCol="features",
-            handleInvalid="keep",
-        )
-    )
-    stages.append(
+            inputCols=num_cols + oh_cols, outputCol="features", handleInvalid="keep"
+        ),
         LogisticRegression(
             featuresCol="features",
             labelCol=label_col,
             maxIter=max_iter,
             probabilityCol="probability",
-        )
-    )
-    return Pipeline(stages=stages)
+        ),
+    ])
 
 
 def _impute_numeric(df: DataFrame, num_cols: list[str]) -> DataFrame:
@@ -84,19 +74,13 @@ def _impute_numeric(df: DataFrame, num_cols: list[str]) -> DataFrame:
     return df.fillna(0.0, subset=present) if present else df
 
 
-def _reload_without_summary(model: PipelineModel) -> PipelineModel:
-    """Round-trip the fitted pipeline through disk so the returned model
-    carries no training summary (summaries reference the SparkSession and
-    poison closure serialization; see train_model)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="pb_etl_spark_model_")
-    try:
-        model.write().overwrite().save(tmp)
-        return PipelineModel.load(tmp)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+def _reload_without_summary(model: PipelineModel, path: str) -> PipelineModel:
+    """Save the fitted pipeline to ``path`` — its one artifact — and load
+    it back, so the returned model carries no training summary (summaries
+    reference the SparkSession and poison closure serialization; see
+    train_model)."""
+    model.write().overwrite().save(path)
+    return PipelineModel.load(path)
 
 
 def _auc(model: PipelineModel, df: DataFrame, label_col: str) -> float:
@@ -115,13 +99,15 @@ def _auc(model: PipelineModel, df: DataFrame, label_col: str) -> float:
 
 def train_model(
     train_df: DataFrame,
+    path: str,
     seed: int = DEFAULT_SEED,
     val_fraction: float = 0.2,
     **pipeline_kwargs,
 ) -> tuple[PipelineModel, dict]:
-    """M3+M5: split, fit, and report metrics. The val split mirrors the
-    reference's sklearn train_test_split(test_size=0.2) (tasks.py:290) but
-    seeded — determinism is a feature the reference lacks. Both splits are
+    """M3+M5: split, fit, save the model to ``path``, and report metrics.
+    The val split mirrors the reference's sklearn
+    train_test_split(test_size=0.2) (tasks.py:290) but seeded —
+    determinism is a feature the reference lacks. Both splits are
     cached: every metric action would otherwise re-execute the full
     upstream plan (and could even observe a different split under
     nondeterministic partition order)."""
@@ -148,9 +134,10 @@ def train_model(
         # anything in the process has used df.observe the session's
         # (lazily created, non-serializable) ObservationManager makes
         # every closure that drags the summary in fail to serialize.
-        # A save/load round-trip sheds the summary — same parameters,
-        # same predictions — and exercises the S7 artifact path.
-        model = _reload_without_summary(model)
+        # Writing the S7 artifact to ``path`` and loading it back sheds
+        # the summary — same parameters, same predictions — so the model
+        # is saved once and scored as the artifact predict will load.
+        model = _reload_without_summary(model, path)
         try:
             metrics["train_auc"] = _auc(model, train, label_col)
             metrics["val_auc"] = _auc(model, val, label_col) if n_val else None

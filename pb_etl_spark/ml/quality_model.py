@@ -150,8 +150,9 @@ def auc_rank(scored: DataFrame, label_col: str = "label", p_col: str = "p") -> f
     )
 
 
-def train_quality_model(doc: DataFrame, seed: int = 42):
-    """Fit on a seeded 80/20 split; returns (model, held-out AUC)."""
+def train_quality_model(doc: DataFrame, path: str, seed: int = 42):
+    """Fit on a seeded 80/20 split, save the model to ``path``; returns
+    (model loaded from ``path``, held-out AUC)."""
     from pyspark.ml.functions import vector_to_array
 
     labeled = weak_labels(doc)
@@ -167,7 +168,7 @@ def train_quality_model(doc: DataFrame, seed: int = 42):
     # the documented Spark 4.1 trap from ml/pipeline.train_model
     from pb_etl_spark.ml.pipeline import _reload_without_summary
 
-    model = _reload_without_summary(model)
+    model = _reload_without_summary(model, path)
     scored = model.transform(val).select(
         "label", vector_to_array("probability").getItem(1).alias("p")
     )

@@ -416,25 +416,19 @@ def ivf_ann_topk(
     )
 
 
-_CORPUS_COUNT_CACHE: dict[str, int] = {}
-
-
 def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    """Row count of the embeddings corpus from parquet FOOTER metadata
-    (driver-side, no Spark job), memoized per sf_dir — sizing a hash
-    family must not cost a full action per query. Falls back to a Spark
-    count (itself metadata-optimized for parquet) on non-local roots."""
-    key = sf_dir.rstrip("/")
-    if key not in _CORPUS_COUNT_CACHE:
-        path = f"{key}/embeddings.parquet"
-        try:
-            import pyarrow.parquet as pq
+    """Row count of the embeddings corpus from parquet FOOTER metadata —
+    driver-side, no Spark job, so sizing a hash family costs no action
+    and is read fresh on every call (a file rewritten in place changes
+    the plane count). Falls back to a Spark count (itself
+    metadata-optimized for parquet) on non-local roots."""
+    try:
+        import pyarrow.parquet as pq
 
-            n = pq.ParquetFile(path).metadata.num_rows
-        except Exception:  # non-posix path (e.g. object store) — let Spark read it
-            n = read_table(spark, sf_dir, "embeddings").count()
-        _CORPUS_COUNT_CACHE[key] = int(n)
-    return _CORPUS_COUNT_CACHE[key]
+        n = pq.ParquetFile(f"{sf_dir.rstrip('/')}/embeddings.parquet").metadata.num_rows
+    except Exception:  # non-posix path (e.g. object store) — let Spark read it
+        n = read_table(spark, sf_dir, "embeddings").count()
+    return int(n)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

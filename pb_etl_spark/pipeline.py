@@ -63,8 +63,7 @@ def _fit_model(spark: SparkSession, out: str, deps: dict[str, str], seed: int) -
     train = read_parquet(spark, deps["load_data"])
     maxes = read_parquet(spark, deps["norm_denominators"])
     normalized = apply_maxabs(train, maxes, NORM_COLS)
-    model, metrics = train_model(normalized, seed=seed)
-    model.write().overwrite().save(f"{out}/{MODEL_SUBDIR}")
+    _, metrics = train_model(normalized, f"{out}/{MODEL_SUBDIR}", seed=seed)
     # metrics sidecar (reference model_hist_params, tasks.py:334-342) — a
     # plain local file: one row through a Spark job would create a
     # DIRECTORY named metrics.json that json.load can't open

@@ -40,6 +40,21 @@ def test_read_table_misses_cache_when_file_regenerated(spark, tmp_path):
     assert a is not b
 
 
+def test_corpus_count_follows_embeddings_rewritten_in_place(spark, tmp_path):
+    # the LSH plane count is sized from this footer read; a memo keyed
+    # by sf_dir served the old count after the file was rewritten
+    import pyarrow.parquet as pq
+
+    from pb_etl_spark.operators.similarity import _corpus_count
+
+    dst = tmp_path / "embeddings.parquet"
+    shutil.copyfile(os.path.join(SF_DIR, "embeddings.parquet"), dst)
+    table = pq.read_table(dst)
+    assert _corpus_count(spark, str(tmp_path)) == table.num_rows
+    pq.write_table(table.slice(0, table.num_rows // 2), dst)
+    assert _corpus_count(spark, str(tmp_path)) == pq.ParquetFile(dst).metadata.num_rows < table.num_rows
+
+
 def test_read_table_cache_is_per_session_key(spark):
     # entries are keyed by the live session object; a second lookup via
     # the same session hits, and the cache never outlives it (weak keys)

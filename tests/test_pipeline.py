@@ -4,13 +4,15 @@ reference's test shape (test_pset.py:131-234) upgraded to value assertions
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
 import pytest
 
-from pb_etl_spark.pipeline import build_graph, run_pipeline
-from pb_etl_spark.schemas import NORM_COLS
+from pb_etl_spark.pipeline import METRICS_FILE, MODEL_SUBDIR, build_graph, run_pipeline
+from pb_etl_spark.plans.stages import StageRunner
+from pb_etl_spark.schemas import CAT_COLS, NORM_COLS
 from pb_etl_spark.sources.parquet import dataset_exists, read_parquet
 from tests.fixtures import write_fixtures
 
@@ -24,8 +26,7 @@ def pipeline_run(spark, tmp_path_factory):
     return {"root": root, "workdir": workdir, "stats": stats, "report": report, "runner": runner}
 
 
-def _stage_path(pipeline_run, name: str) -> str:
-    g = build_graph(root=pipeline_run["root"], seed=42)
+def _stages(terminal) -> dict:
     stages = {}
 
     def walk(s):
@@ -33,8 +34,13 @@ def _stage_path(pipeline_run, name: str) -> str:
         for d in s.deps.values():
             walk(d)
 
-    walk(g)
-    return stages[name].out_path(pipeline_run["workdir"])
+    walk(terminal)
+    return stages
+
+
+def _stage_path(pipeline_run, name: str) -> str:
+    g = build_graph(root=pipeline_run["root"], seed=42)
+    return _stages(g)[name].out_path(pipeline_run["workdir"])
 
 
 def test_all_stages_materialized(pipeline_run):
@@ -83,6 +89,83 @@ def test_backtest_and_report(spark, pipeline_run):
     assert set(df.columns) == {"TRANSACTION_ID", "TARGET", "Y_hat"}
     assert math.isclose(report["actual"], stats["actual_rate"], abs_tol=1e-9)
     assert 0.0 < report["expected"] < 1.0
+
+
+def test_model_is_one_indexer_over_all_categoricals(pipeline_run):
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.feature import StringIndexerModel
+
+    model = PipelineModel.load(f"{_stage_path(pipeline_run, 'fit_model')}/{MODEL_SUBDIR}")
+    assert len(model.stages) == 4
+    indexers = [s for s in model.stages if isinstance(s, StringIndexerModel)]
+    assert len(indexers) == 1
+    assert indexers[0].getInputCols() == CAT_COLS
+    assert indexers[0].getOutputCols() == [f"{c}__idx" for c in CAT_COLS]
+
+
+def test_multi_column_indexer_matches_single_column_indexers(spark, pipeline_run):
+    """The one multi-column indexer learns exactly the vocabularies (and
+    their order) that one single-column indexer per categorical learns."""
+    from pyspark.ml.feature import StringIndexer
+
+    from pb_etl_spark.ml.pipeline import build_pipeline
+
+    df = read_parquet(spark, _stage_path(pipeline_run, "load_data"))
+    multi = build_pipeline().getStages()[0].fit(df)
+    single = [
+        StringIndexer(inputCol=c, outputCol=f"{c}__idx", handleInvalid="keep").fit(df).labels
+        for c in CAT_COLS
+    ]
+    assert multi.labelsArray == single
+
+
+def test_fit_and_predict_job_ceilings(spark, pipeline_run, tmp_path):
+    """A cold DAG run, each stage body under its own job group. With one
+    multi-column indexer and the model written once, fit_model runs 57
+    jobs at the fixture size and predict 19; ten per-column indexers
+    with a temp-dir round trip and a second save ran 164 and 55."""
+    sc = spark.sparkContext
+    group = f"ceiling-{os.path.basename(tmp_path)}"
+    terminal = build_graph(root=pipeline_run["root"], seed=42)
+    for st in _stages(terminal).values():
+
+        def fn(*args, _inner=st.fn, _name=st.name):
+            sc.setJobGroup(f"{group}-{_name}", _name)
+            try:
+                return _inner(*args)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        st.fn = fn
+    StageRunner(spark, str(tmp_path)).run(terminal)
+    jobs = {
+        name: len(sc.statusTracker().getJobIdsForGroup(f"{group}-{name}"))
+        for name in ("fit_model", "predict")
+    }
+    # fit_model: two input reads, one indexer-fit job, broadcasts and
+    # split counts, one job per LR iteration (14 here; the only
+    # data-dependent term), one save (8 jobs) and one load (15) of the
+    # 4-stage model, and two AUC evaluations of 3 jobs each. 60 admits a
+    # few more LR iterations, but not a second save or load of the model
+    # or an indexer per column
+    assert jobs["fit_model"] <= 60, jobs
+    # predict: two input reads, one load of the 4-stage model (15 jobs)
+    # and the scoring write (2). Each stage with data adds 4 load jobs,
+    # so a fifth one crosses the ceiling; the 13-stage model's load
+    # alone took 51
+    assert jobs["predict"] <= 20, jobs
+
+
+def test_metrics_sidecar(pipeline_run):
+    with open(os.path.join(_stage_path(pipeline_run, "fit_model"), METRICS_FILE)) as fh:
+        metrics = json.load(fh)
+    assert {
+        "train_rows", "val_rows", "iterations", "objective_history", "train_auc", "val_auc",
+    } <= set(metrics)
+    assert metrics["train_rows"] + metrics["val_rows"] == pipeline_run["stats"]["n_train"]
+    assert metrics["iterations"] == len(metrics["objective_history"]) >= 1
+    for k in ("train_auc", "val_auc"):
+        assert metrics[k] is None or 0.0 <= metrics[k] <= 1.0, (k, metrics[k])
 
 
 def test_rerun_skips_all_materialized(spark, pipeline_run):

@@ -20,10 +20,10 @@ def docs(spark):
 
 
 @pytest.fixture(scope="module")
-def fitted(spark, docs):
+def fitted(spark, docs, tmp_path_factory):
     from pb_etl_spark.ml.quality_model import train_quality_model
 
-    return train_quality_model(docs, seed=42)
+    return train_quality_model(docs, str(tmp_path_factory.mktemp("quality_model")), seed=42)
 
 
 def test_quality_model_learns_the_rule_boundary(fitted):
@@ -45,11 +45,11 @@ def test_scoring_is_distributed_and_bounded(spark, docs, fitted):
     assert "BatchEvalPython" not in plan
 
 
-def test_seed_determinism(spark, docs):
+def test_seed_determinism(spark, docs, tmp_path):
     from pb_etl_spark.ml.quality_model import score_quality, train_quality_model
 
-    m1, auc1 = train_quality_model(docs, seed=7)
-    m2, auc2 = train_quality_model(docs, seed=7)
+    m1, auc1 = train_quality_model(docs, str(tmp_path / "m1"), seed=7)
+    m2, auc2 = train_quality_model(docs, str(tmp_path / "m2"), seed=7)
     assert auc1 == auc2
     s1 = score_quality(m1, docs).toPandas().set_index("doc_id").sort_index()
     s2 = score_quality(m2, docs).toPandas().set_index("doc_id").sort_index()
