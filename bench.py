@@ -1,25 +1,15 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"queries": {<name>: secs, ...}, "qx": {<HEADLINE index>:
-secs, ...}, "hl": <crc32 of the HEADLINE list>, "metric": ...,
-"value": N, "unit": "sec", "sf": ...}. The r14 verdict (item 2) found
-the pure index-coded record of r12-r14 kept PERF's per-query and
-scaling blocks EMPTY — the driver's generic parser reads name-keyed
-"queries" and cannot import this repo's decoder — so per-query rows are
-now split: the ``NAMED`` subset (the 45 slowest per the r14 driver
-record, ~80% of total time, a FIXED list so the driver's c8-vs-c32
-scaling comparison sees identical name sets in both runs) is emitted
-name-keyed in "queries", and the rest stays index-coded in "qx" so the
-whole record still fits the driver's 2000-byte tail-capture window
-(worst-case line measured 1855 B; pinned by test). Nothing is dropped:
-every headline query is in the line (by name or index), and
-``tools/bench_compare.load()`` merges/decodes both (crc-guarded).
-Each run also writes a full-name mirror of the record to
-``.bench/BENCH_FULL_latest.json`` (ignored scratch; override with
-$SPARK_GRAFT_BENCH_FULL_PATH) — the committed ``BENCH_FULL.json`` is the
-mirror of the DRIVER's recorded round run only, refreshed deliberately
-by the round workflow, never as a side effect of a local run; its
-``boot`` stamp must match the round's BENCH_r{N}.json.
+"""Benchmark harness: times the HEADLINE queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on ``local[N]``, N = ``session.LOCAL_CPUS``
+($SPARK_GRAFT_CPUS, else every core), and prints ONE JSON line,
+``encode_line``'s: the fixed ``NAMED`` subset name-keyed in "queries",
+the rest index-coded in "qx" ({<HEADLINE index>: secs}), "hl" (the
+crc32 of HEADLINE), then "metric", "value" (the total, s), "unit" and
+"sf". A plain JSON reader gets the NAMED rows by name; ``decode_line``
+recovers all of them. The line stays within 1900 bytes for any timings
+up to 99.999 s (pinned by tests/test_bench_line.py), so a 2000-byte
+tail capture of the output keeps it whole. Each run also writes the
+decoded full-name record to ``.bench/BENCH_FULL_latest.json`` (ignored;
+override with $SPARK_GRAFT_BENCH_FULL_PATH).
 
 Each query is executed with a noop-format write: unlike ``count()`` —
 which Catalyst rewrites to Aggregate(count(1)) and then PRUNES the
@@ -27,17 +17,11 @@ query's own aggregates/projections out of the plan — the noop sink
 materializes every output column (full real work), with no driver-side
 pandas conversion or disk cost in the measurement.
 
-Each query is timed ``N_RUNS`` times and the MINIMUM is recorded: the
-min is the least-noise estimator of the engine's actual cost (ambient
-load on a shared host only ever adds time, never subtracts), which keeps
-round-over-round comparisons about plan changes rather than scheduler
-luck.
-
-Cross-ROUND caveat: the host reboots between rounds and its effective
-CPU budget drifts within a day (round 3: the same commit measured 0.17 s
-vs 0.35 s on filter_pushdown hours apart with zero code change). Treat
-sub-0.5 s per-query deltas across rounds as ambient unless a same-boot
-A/B (tools/bench_compare.py, min-of-3, back-to-back) reproduces them.
+Each query is timed ``N_RUNS`` times ($SPARK_GRAFT_BENCH_RUNS, default
+3) and the MINIMUM is recorded: the min is the least-noise estimator of
+the engine's actual cost (ambient load on a shared host only ever adds
+time, never subtracts), which keeps a same-host A/B about plan changes
+rather than scheduler luck.
 """
 
 from __future__ import annotations
@@ -52,7 +36,7 @@ import zlib
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pb_etl_spark.registry import all_queries
-from pb_etl_spark.session import get_spark
+from pb_etl_spark.session import LOCAL_CPUS, get_spark
 
 HEADLINE = [
     "tpch_q1_pricing",
@@ -190,12 +174,10 @@ HEADLINE = [
     "stream_vocab_drift",
 ]
 
-# The name-keyed subset of the stdout line (r14 verdict item 2): the 45
-# slowest queries of the r14 DRIVER record, in that record's time order.
-# FIXED deliberately — a per-run "slowest 45" would emit different name
-# sets at different core counts and shrink the driver's scaling
-# intersection. Append new heavyweights here only while the worst-case
-# line stays under the window (tests/test_bench_line.py pins it).
+# The name-keyed subset of the stdout line: the 45 slowest queries as of
+# r14, a FIXED list so every run emits the same names whatever its core
+# count. Append new heavyweights here only while the worst-case line
+# stays under 1900 B (tests/test_bench_line.py pins it).
 NAMED = [
     "mmr_diverse_topk",
     "shingle_containment_pairs",
@@ -245,129 +227,76 @@ NAMED = [
 ]
 
 
-def _boot_stamp() -> str:
-    """``<first-8-of-boot_id>+<uptime-hours>h`` — which boot produced
-    this record, and how warm the host was. Best-effort (Linux procfs);
-    'unknown' elsewhere."""
-    try:
-        with open("/proc/sys/kernel/random/boot_id") as f:
-            boot = f.read().strip()[:8]
-        with open("/proc/uptime") as f:
-            up_h = float(f.read().split()[0]) / 3600
-        return f"{boot}+{up_h:.1f}h"
-    except Exception:  # noqa: BLE001 — masked/odd procfs (empty or
-        # non-numeric files raise ValueError/IndexError, not OSError)
-        # must not cost the whole run's timings at summary time
-        return "unknown"
+# "hl" of every line: a line decodes only against the HEADLINE that wrote
+# it, so reordering or editing HEADLINE fails loudly instead of
+# mislabeling the index-coded rows.
+HL_CRC = zlib.crc32(";".join(HEADLINE).encode())
 
 
-def calibrate(spark, sf_dir: str, n: int = 5) -> float:
-    """Machine-speed anchor (r03 verdict directive #4): min-of-``n`` of a
-    FIXED, trivially-planned workload — a full lineitem scan + one
-    column sum (no shuffle, one stage, fully codegen'd). Its only
-    variable across rounds is the host itself (reboots, ambient CPU
-    drift — round 3 measured the same commit 2× apart hours apart), so
-    ``tools/bench_compare.py`` divides cross-round ratios by the
-    calibration ratio to separate drift from plan regressions."""
-    path = f"{sf_dir.rstrip('/')}/lineitem.parquet"
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.time()
-        spark.read.parquet(path).selectExpr("sum(l_quantity)").collect()
-        best = min(best, time.time() - t0)
-    return round(best, 4)
-
-
-def calibrate_shuffle(spark, n: int = 5) -> float:
-    """Second anchor: a FIXED fixture-independent multi-stage workload
-    (range → hash-partitioned groupBy → sorted grouped window → 1-row
-    agg: two exchanges, three stages). The scan anchor is blind to
-    multi-stage scheduling ambience — r09's driver bench moved 45
-    queries >1.3× wholesale while the scan anchor moved the OPPOSITE
-    way, and the r10 local runs repeated the pattern — so cross-round
-    adjudication gets a scheduling-floor drift signal too."""
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.time()
-        (
-            spark.range(2_000_000)
-            .selectExpr("id % 1024 AS k", "id % 7 AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
-            .withColumnRenamed("sum(v)", "s")
-            .selectExpr(
-                "s",
-                "row_number() OVER (PARTITION BY k % 32 ORDER BY k) AS rn",
-            )
-            .selectExpr("max(s + rn)")
-            .collect()
-        )
-        best = min(best, time.time() - t0)
-    return round(best, 4)
-
-
-def prior_slowest(n: int = 3) -> list[str]:
-    """Names of the ``n`` slowest queries from the latest BENCH_r*.json
-    next to this script (empty if none exists yet)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    # numeric round sort: lexicographic would put BENCH_r10 before BENCH_r2
-    benches = sorted(
-        (f for f in os.listdir(here) if re.fullmatch(r"BENCH_r\d+\.json", f)),
-        key=lambda f: int(re.search(r"\d+", f).group()),
+def encode_line(timings: dict[str, float], total: float, sf: float) -> str:
+    """The stdout line for per-query ``timings`` over all of HEADLINE."""
+    named = set(NAMED)
+    return json.dumps(
+        {
+            "queries": {n: timings[n] for n in NAMED},
+            "qx": {
+                str(i): timings[n] for i, n in enumerate(HEADLINE) if n not in named
+            },
+            "hl": HL_CRC,
+            "metric": "headline_queries_total",
+            "value": round(total, 3),
+            "unit": "sec",
+            "sf": sf,
+        },
+        separators=(",", ":"),
     )
-    if not benches:
-        return []
-    try:
-        # one parser for the driver's record shapes ("queries" at top
-        # level, nested under "parsed", or raw in "tail") — shared with
-        # the comparison tool so a format change can't silently disable
-        # the warm-up here while bench_compare still works
-        from tools.bench_compare import load as _load_bench
 
-        prior = _load_bench(os.path.join(here, benches[-1])).get("queries", {})
-    except (OSError, json.JSONDecodeError, SystemExit, ImportError):
-        return []
-    return sorted(prior, key=prior.get, reverse=True)[:n]
+
+def decode_line(text: str) -> dict:
+    """``encode_line``'s record with "qx" merged back into "queries" under
+    full names. ``text`` is the line itself or captured output holding
+    it (the first line that starts with ``{``)."""
+    line = next((ln for ln in text.splitlines() if ln.startswith("{")), None)
+    if line is None:
+        raise ValueError("no bench JSON line in the input")
+    doc = json.loads(line)
+    qx = doc.pop("qx")
+    max_idx = max((int(i) for i in qx), default=-1)
+    if max_idx >= len(HEADLINE):
+        raise ValueError(
+            f"bench line indexes up to {max_idx} but the current HEADLINE "
+            f"has only {len(HEADLINE)} entries — the line was written "
+            "against a longer list"
+        )
+    if doc.pop("hl", None) != HL_CRC:
+        raise ValueError(
+            "bench line's HEADLINE crc does not match the current HEADLINE — "
+            "it was reordered/edited or the line is corrupt; index decode "
+            "would mislabel queries"
+        )
+    decoded = {HEADLINE[int(i)]: v for i, v in qx.items()}
+    overlap = set(doc["queries"]) & set(decoded)
+    if overlap:
+        raise ValueError(
+            f"bench line has {sorted(overlap)[:3]} in BOTH queries and qx — "
+            "corrupt line or stale NAMED/HEADLINE lists"
+        )
+    doc["queries"].update(decoded)
+    return doc
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
+    spark = get_spark(
+        "bench", master=f"local[{LOCAL_CPUS}]", shuffle_partitions=LOCAL_CPUS
+    )
     queries = all_queries()
 
     # steady-state warm-up: JIT/codegen + parquet footer caches, untimed.
     # Warm with a NON-headline query so no timed entry gets a free warm
-    # second run the others don't ...
+    # second run the others don't.
     spark.read.parquet(f"{sf_dir.rstrip('/')}/region.parquet").count()
     queries["semi_join"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # calibrate BEFORE the heavy warm-up, at exactly this point in the
-    # session: the anchor's cross-round comparability depends on a FIXED
-    # measurement protocol (light warm-up → calibrate), and that is the
-    # protocol every prior round's recorded calib used. Measured: running
-    # 3 heavy queries first JIT-warms the scan and drops calib ~25%
-    # (0.192 → 0.147 same host, same hour) — which would inflate every
-    # drift-normalized timing by ~1.4× against prior rounds and
-    # manufacture wholesale fake regressions in bench_compare.
-    calib = calibrate(spark, sf_dir)
-    print(f"# calib_scan_s: {calib:.4f}s", file=sys.stderr)
-    # the shuffle anchor runs at the same fixed point; r10 and earlier
-    # rounds have no recorded value (bench_compare treats it as
-    # optional), so its protocol position only needs to be stable from
-    # r10 onward
-    calib_shuffle = calibrate_shuffle(spark)
-    print(f"# calib_shuffle_s: {calib_shuffle:.4f}s", file=sys.stderr)
-
-    # ... THEN the 3 slowest prior-round queries, once each, untimed
-    # (r04 verdict directive #7): the heaviest plans exercise the widest
-    # JIT/codegen surface, so running them first makes warm-up uniform
-    # instead of landing the cold-start cost on whatever row is timed
-    # first (r04's tpch_q1_pricing 0.51→0.61 first-row pattern).
-    for name in prior_slowest():
-        if name in queries:
-            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            print(f"# warmed: {name}", file=sys.stderr)
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
@@ -386,69 +315,15 @@ def main() -> None:
 
     m = re.search(r"sf(\d+(?:\.\d+)?)/?$", sf_dir.rstrip("/"))
     sf = float(m.group(1)) if m else 0.0
-    summary = {
-        "metric": "headline_queries_total",
-        "value": round(total, 3),
-        "unit": "sec",
-        "sf": sf,
-        "calib_scan_s": calib,
-        "calib_shuffle_s": calib_shuffle,
-        # host-regime stamp (r12 verdict item 5): r12 had TWO plausible
-        # "full r12 records" 1.5× apart because a quiet-host re-run and
-        # the driver's run were indistinguishable after the fact. The
-        # boot id (+ uptime at measurement) pins which boot produced a
-        # record, so a re-run on a different boot can never be mistaken
-        # for the driver's.
-        "boot": _boot_stamp(),
-    }
+    line = encode_line(timings, total, sf)
     here = os.path.dirname(os.path.abspath(__file__))
-    # full-name record to a file: complete regardless of how much of
-    # stdout the driver's capture keeps. Written to an IGNORED scratch
-    # path (ADVICE r12: writing the committed BENCH_FULL.json directly
-    # meant every exploratory local run dirtied the tree and could
-    # silently clobber the official round mirror) — the round workflow
-    # copies the driver-run record into the committed BENCH_FULL.json
-    # deliberately, verifying the boot stamp against BENCH_r{N}.json.
     full_path = os.environ.get(
         "SPARK_GRAFT_BENCH_FULL_PATH",
         os.path.join(here, ".bench", "BENCH_FULL_latest.json"),
     )
     os.makedirs(os.path.dirname(full_path) or ".", exist_ok=True)
     with open(full_path, "w") as f:
-        json.dump({"queries": timings, **summary}, f, indent=1)
-    # stdout line: the driver's bench-tail capture keeps only the LAST
-    # 2000 bytes (BENCH_r09 lost the summary keys to front-truncation;
-    # r11's reordered record lost ~15 per-query rows instead — the full-
-    # name 80-query dict alone outgrows the window at ~2150 B). The
-    # r12-r14 pure index coding fit but left the DRIVER's generic parser
-    # with per_query/scaling EMPTY (r14 verdict item 2), so the record
-    # is now hybrid: the FIXED ``NAMED`` subset name-keyed in "queries"
-    # (driver-legible, 80% of total time), the rest index-coded in "qx"
-    # against HEADLINE (lossless; tools/bench_compare.load() merges
-    # both, crc-guarded by "hl"). HEADLINE stays APPEND-ONLY: reordering
-    # or deleting entries would shift the indexes of every already-
-    # recorded round (the crc turns that mistake into a hard error, not
-    # silent mislabeling).
-    named = set(NAMED)
-    compact = {
-        "queries": {n: timings[n] for n in NAMED},
-        "qx": {
-            str(i): timings[n]
-            for i, n in enumerate(HEADLINE)
-            if n not in named
-        },
-        "hl": zlib.crc32(";".join(HEADLINE).encode()),
-        **summary,
-    }
-    line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > 1900 and compact["queries"]:
-        # paranoia fallback (should never fire: worst-case 1855 B is
-        # pinned by test): demote the fastest named rows to index coding
-        # until the line fits — nothing is dropped, only re-keyed.
-        drop = min(compact["queries"], key=compact["queries"].get)
-        compact["qx"][str(HEADLINE.index(drop))] = compact["queries"].pop(drop)
-        line = json.dumps(compact, separators=(",", ":"))
-        print(f"# bench line over budget: demoted {drop} to qx", file=sys.stderr)
+        json.dump(decode_line(line), f, indent=1)
     print(line)
 
 

@@ -1,9 +1,9 @@
 """SparkSession factory.
 
 One place to set the scale-aware defaults (AQE, shuffle partitions, Arrow,
-UTC session timezone). Library code never hard-codes a master: tests and
-bench pass ``local[N]``; on a real cluster the session comes from
-spark-submit and ``getOrCreate`` picks it up.
+UTC session timezone, the local core count ``LOCAL_CPUS``: $SPARK_GRAFT_CPUS,
+else every core). Library code never hard-codes a master: tests and bench
+pass ``local[N]``; on a cluster ``getOrCreate`` picks up spark-submit's.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def get_spark(
@@ -35,7 +35,7 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    n_shuffle = shuffle_partitions or LOCAL_CPUS
     conf = {
         # local mode = ONE JVM doing driver AND executor work: the 1g
         # driver default OOMs on iterative workloads (checkpoint blocks +

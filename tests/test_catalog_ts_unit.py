@@ -83,7 +83,7 @@ def test_get_spark_reapplies_runtime_confs_on_reused_session(spark):
     key = "spark.sql.session.timeZone"
     # snapshot every runtime conf get_spark touches (it will re-apply
     # its defaults to the SHARED test session — e.g. shuffle partitions
-    # 4 -> 32 — and later tests assume the fixture's values)
+    # 4 -> LOCAL_CPUS — and later tests assume the fixture's values)
     restore_keys = [
         key,
         "spark.sql.shuffle.partitions",

@@ -262,3 +262,22 @@ def test_derived_cache_rebuilds_when_source_regenerated(tmp_path):
     # source deleted entirely -> rebuild path must not crash the gate
     src.unlink()
     assert derived_cache_needs_rebuild(marker, src)
+
+
+def test_xml_roundtrip_preserves_row_level_values(spark):
+    """Beyond the oracle's aggregate match: the XML encode/decode is a
+    row-level identity on every carried field."""
+    from pb_etl_spark.catalog import read_table
+
+    o = read_table(spark, SF_DIR, "orders").selectExpr(
+        "o_orderkey AS k",
+        "o_orderstatus AS s",
+        "CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c",
+    )
+    back = (
+        o.selectExpr("to_xml(named_struct('k', k, 's', s, 'c', c)) AS x")
+        .selectExpr("from_xml(x, 'k BIGINT, s STRING, c BIGINT') AS r")
+        .select("r.k", "r.s", "r.c")
+    )
+    assert back.exceptAll(o).count() == 0
+    assert o.exceptAll(back).count() == 0

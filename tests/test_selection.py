@@ -6,8 +6,12 @@ test_oracle_parity.py."""
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
@@ -216,3 +220,108 @@ def test_vocab_drift_from_cells_one_sided_empty_snapshot():
         assert r2["rate_new"] is None and r2["rate_old"] is not None
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_ks_mann_whitney_matches_python_model(spark):
+    """Both statistics re-derived from scratch in Python over the same
+    collected values — including a brute-force O(n_a*n_b) Mann-Whitney U
+    (pair counting with half-credit ties), which independently verifies
+    the doubled-midrank algebra the query uses."""
+    from pb_etl_spark.catalog import read_table
+    from pb_etl_spark.operators.selection import q_ks_mann_whitney
+
+    rows = (
+        read_table(spark, SF_DIR, "documents")
+        .select(F.size(F.split("text", " ")).alias("v"), "lang")
+        .collect()
+    )
+    a = [r["v"] for r in rows if r["lang"] == "en"]
+    b = [r["v"] for r in rows if r["lang"] != "en"]
+    n_a, n_b = len(a), len(b)
+    ca, cb = Counter(a), Counter(b)
+    cum_a = cum_b = d_num = s2 = ties = 0
+    for v in sorted(set(a) | set(b)):
+        ta, tb = ca.get(v, 0), cb.get(v, 0)
+        before = cum_a + cum_b
+        cum_a, cum_b = cum_a + ta, cum_b + tb
+        d_num = max(d_num, abs(cum_a * n_b - cum_b * n_a))
+        t = ta + tb
+        s2 += ta * (2 * before + t + 1)
+        ties += t * t * t - t
+    u1 = (s2 - n_a * (n_a + 1)) / 2.0
+    u_brute = sum((x > y) + 0.5 * (x == y) for x in a for y in b)
+    assert u1 == u_brute, "doubled-midrank algebra disagrees with pair counting"
+    n = n_a + n_b
+    mu = n_a * n_b / 2.0
+    sig2 = n_a * n_b / 12.0 * ((n + 1.0) - ties / (n * (n - 1.0)))
+    z = (u1 - mu) / math.sqrt(sig2)
+    [r] = q_ks_mann_whitney(spark, SF_DIR).collect()
+    assert (r["n_a"], r["n_b"], r["ks_d_num"]) == (n_a, n_b, d_num)
+    assert r["mw_u1"] == u1
+    assert abs(r["ks_d"] - d_num / (n_a * n_b)) < 1e-9
+    assert abs(r["mw_z"] - z) < 1e-6
+
+
+def test_two_sample_rank_tests_raise_on_degenerate_inputs(spark):
+    """One-sided or all-tied inputs make the statistics 0/0; the helper
+    must raise its curated error instead of emitting silent NaN."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from pb_etl_spark.operators.selection import two_sample_rank_tests
+
+    one_sided = spark.createDataFrame(
+        [(1, 3, 0), (2, 4, 0)], "v long, cnt_a long, cnt_b long"
+    )
+    with pytest.raises((Py4JJavaError, SparkRuntimeException)) as e1:
+        two_sample_rank_tests(one_sided).collect()
+    assert "undefined" in str(e1.value)
+    all_tied = spark.createDataFrame(
+        [(7, 3, 4)], "v long, cnt_a long, cnt_b long"
+    )
+    with pytest.raises((Py4JJavaError, SparkRuntimeException)) as e2:
+        two_sample_rank_tests(all_tied).collect()
+    assert "undefined" in str(e2.value)
+
+
+def test_source_drift_matrix_matches_python_model(spark):
+    """Every pair's exact KS numerator must equal the direct two-sample
+    ECDF comparison computed in Python over the same token counts, and
+    the matrix must cover exactly the |sources| -choose- 2 ordered
+    pairs."""
+    from itertools import combinations
+
+    from pb_etl_spark.catalog import read_table
+    from pb_etl_spark.operators.selection import q_source_drift_matrix
+
+    docs = (
+        read_table(spark, SF_DIR, "documents")
+        .select("source", F.size(F.split("text", " ")).alias("v"))
+        .collect()
+    )
+    vals: dict[str, list] = {}
+    for r in docs:
+        vals.setdefault(r["source"], []).append(r["v"])
+    grid = sorted({v for vs in vals.values() for v in vs})
+    want = {}
+    for sa, sb in combinations(sorted(vals), 2):
+        a, b = vals[sa], vals[sb]
+        n_a, n_b = len(a), len(b)
+        d = max(
+            abs(
+                sum(x <= v for x in a) * n_b
+                - sum(x <= v for x in b) * n_a
+            )
+            for v in grid
+        )
+        want[(sa, sb)] = (n_a, n_b, d, round(d / (n_a * n_b), 9))
+    got = {
+        (r["source_a"], r["source_b"]): (
+            r["n_a"],
+            r["n_b"],
+            r["ks_d_num"],
+            r["ks_d"],
+        )
+        for r in q_source_drift_matrix(spark, SF_DIR).collect()
+    }
+    assert got == want

@@ -1,11 +1,10 @@
 """Capture ``explain("formatted")`` for registered queries to files.
 
-Round deliverable: ``plans/r{N}/<query>_{before,after}.txt`` — the
-physical-plan evidence for every query an optimization round touches.
+Writes ``<out>/<query>_<suffix>.txt`` (default ``plans/<query>_before.txt``).
 
 Usage:
-    python tools/capture_plans.py --out plans/r14 --suffix before NAME...
-    python tools/capture_plans.py --out plans/r14 --suffix after  NAME...
+    python tools/capture_plans.py --out plans --suffix before NAME...
+    python tools/capture_plans.py --out plans --suffix after  NAME...
 
 Uses a bench-identical session (same confs, same shuffle width) so the
 captured plans are the ones the bench actually runs. Queries that launch
@@ -24,13 +23,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pb_etl_spark.registry import all_queries
-from pb_etl_spark.session import get_spark
+from pb_etl_spark.session import LOCAL_CPUS, get_spark
 
 
 def main() -> None:
     args = sys.argv[1:]
-    out, suffix, sf = "plans/r14", "before", "/root/testdata/sf0.1"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    out, suffix, sf = "plans", "before", "/root/testdata/sf0.1"
     while args and args[0].startswith("--"):
         flag, val, args = args[0], args[1], args[2:]
         if flag == "--out":
@@ -44,7 +42,9 @@ def main() -> None:
     if not args:
         raise SystemExit("usage: capture_plans.py [--out DIR] [--suffix S] NAME...")
     os.makedirs(out, exist_ok=True)
-    spark = get_spark("plans", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark = get_spark(
+        "plans", master=f"local[{LOCAL_CPUS}]", shuffle_partitions=LOCAL_CPUS
+    )
     queries = all_queries()
     for name in args:
         df = queries[name](spark, sf)

@@ -24,7 +24,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pb_etl_spark.registry import all_queries  # noqa: E402
-from pb_etl_spark.session import get_spark  # noqa: E402
+from pb_etl_spark.session import LOCAL_CPUS, get_spark  # noqa: E402
 
 
 def audit(plan: str) -> dict:
@@ -45,8 +45,9 @@ def audit(plan: str) -> dict:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark("plan_audit", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
+    spark = get_spark(
+        "plan_audit", master=f"local[{LOCAL_CPUS}]", shuffle_partitions=LOCAL_CPUS
+    )
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
 
     if len(sys.argv) > 1:

@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pb_etl_spark.registry import all_queries
-from pb_etl_spark.session import get_spark
+from pb_etl_spark.session import LOCAL_CPUS, get_spark
 
 
 def profile(names: list[str], sf_dir: str, cpus: int) -> None:
@@ -133,7 +133,7 @@ def _report(evdir: str, app_id: str, marker: str) -> None:
 if __name__ == "__main__":
     args = sys.argv[1:]
     sf = "/root/testdata/sf0.1"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = LOCAL_CPUS
     while args and args[0].startswith("--"):
         if args[0] == "--sf":
             sf = args[1]

@@ -10,7 +10,7 @@ exponent = log(t_big / t_base) / log(K) — a linear plan lands near 1.0
 (plus fixed-overhead dilution pushing it BELOW 1 on sub-second
 queries); anything much above 1 is super-linear and needs a look.
 Both fixtures are timed in ONE session back-to-back (min-of-2), so
-host drift cancels — the same reasoning as bench.py's calibration row.
+host drift cancels.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pb_etl_spark.registry import all_queries
-from pb_etl_spark.session import get_spark
+from pb_etl_spark.session import LOCAL_CPUS, get_spark
 
 # the heaviest headline families (r03 bench tail) + the iterative /
 # collision-neighborhood plans where super-linear degradation would hide
@@ -140,7 +140,9 @@ def main() -> None:
     if unknown:
         print(f"names not in SMOKE: {sorted(unknown)}", file=sys.stderr)
         raise SystemExit(2)
-    spark = get_spark("scale-smoke", master="local[32]", shuffle_partitions=32)
+    spark = get_spark(
+        "scale-smoke", master=f"local[{LOCAL_CPUS}]", shuffle_partitions=LOCAL_CPUS
+    )
     queries = all_queries()
     spark.read.parquet(f"{base}/region.parquet").count()  # JVM warmup
 
