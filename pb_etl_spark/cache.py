@@ -16,9 +16,10 @@ then act, before the next query is built.
 
 ``localCheckpoint`` is used instead of a pin where the frame must be cut
 off from its lineage: a loop that would otherwise grow its plan every
-round, a nondeterministic column that must be frozen before the plan
-branches, or a frame that feeds a driver-side collect while the plan is
-built.
+round, or a nondeterministic column that must be frozen before the plan
+branches. A few small frames that several legs share stay eager
+checkpoints because a pin measured slower there; ``BUILD_JOBS_WHITELIST``
+in tests/test_plan_lint.py lists them with the numbers.
 """
 
 from __future__ import annotations

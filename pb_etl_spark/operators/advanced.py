@@ -443,17 +443,12 @@ def q_mad_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows beyond median ± 3·1.4826·MAD — the outlier rule that, unlike
     z-scores (see value_outliers), is not itself dragged by the
     outliers. Exact MAD is inherently sequential — three scans (median;
-    median of |x − median|; flag) — so each stage's 5-row result is
-    COLLECTED and re-joined as a literal frame: a lazy reference would
-    make Spark physically re-execute the earlier scans+percentile aggs
-    inside every later branch (driver-sized collect, same rule as the
-    normalization denominators). The approx_percentile swap applies at
-    100 TB."""
+    median of |x − median|; flag) — each joining the previous stage's
+    broadcast 5-row per-priority table, all in one lazy plan. The
+    approx_percentile swap applies at 100 TB."""
     o = read_table(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
-    med = spark.createDataFrame(
-        o.groupBy("o_orderpriority")
-        .agg(F.percentile("o_totalprice", F.lit(0.5)).alias("med"))
-        .collect()
+    med = o.groupBy("o_orderpriority").agg(
+        F.percentile("o_totalprice", F.lit(0.5)).alias("med")
     )
     dev = o.join(F.broadcast(med), "o_orderpriority").select(
         "o_orderpriority",
@@ -461,10 +456,8 @@ def q_mad_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "med",
         F.abs(F.col("o_totalprice") - F.col("med")).alias("adev"),
     )
-    mad = spark.createDataFrame(
-        dev.groupBy("o_orderpriority")
-        .agg(F.first("med").alias("med"), F.percentile("adev", F.lit(0.5)).alias("mad"))
-        .collect()
+    mad = dev.groupBy("o_orderpriority").agg(
+        F.first("med").alias("med"), F.percentile("adev", F.lit(0.5)).alias("mad")
     )
     flagged = o.join(F.broadcast(mad), "o_orderpriority")
     return flagged.groupBy("o_orderpriority").agg(
@@ -1043,18 +1036,19 @@ def q_join_cardinality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins drift). Every input is an exact integer (counts + exact NDVs);
     the estimate is one division per row.
 
-    Scale shape: one aggregate pass per table side (count +
-    count_distinct on the key), one count per join — at 100 TB the NDVs
-    come from the stored KMV/HLL sketches instead, same formula."""
+    Scale shape: one plan; each table side's (count, count_distinct on
+    the key) and each join's size is a scalar subquery — at 100 TB the
+    NDVs come from the stored KMV/HLL sketches instead, same formula."""
     li = read_table(spark, sf_dir, "lineitem")
     o = read_table(spark, sf_dir, "orders")
     c = read_table(spark, sf_dir, "customer")
 
     def side_stats(df, key):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"), F.count_distinct(key).alias("ndv")
-        ).first()
-        return int(r["n"]), int(r["ndv"])
+        return df.select(
+            F.struct(
+                F.count(F.lit(1)).alias("n"), F.count_distinct(key).alias("ndv")
+            )
+        ).scalar()
 
     joins = [
         ("lineitem*orders@orderkey", li, "l_orderkey", o, "o_orderkey"),
@@ -1062,18 +1056,22 @@ def q_join_cardinality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     rows = []
     for name, a, ka, b, kb in joins:
-        na, ndva = side_stats(a, ka)
-        nb, ndvb = side_stats(b, kb)
-        actual = a.join(b, a[ka] == b[kb]).count()
-        est = na * nb / max(ndva, ndvb)
+        sa, sb = side_stats(a, ka), side_stats(b, kb)
+        max_ndv = F.greatest(sa["ndv"], sb["ndv"])
+        actual = a.join(b, a[ka] == b[kb]).select(F.count(F.lit(1))).scalar()
         rows.append(
-            (name, na, nb, max(ndva, ndvb), round(est, 6), actual)
+            spark.range(1).select(
+                F.lit(name).alias("join_name"),
+                sa["n"].alias("n_left"),
+                sb["n"].alias("n_right"),
+                max_ndv.alias("max_ndv"),
+                F.round(sa["n"].cast("double") * sb["n"] / max_ndv, 6).alias(
+                    "est_rows"
+                ),
+                actual.alias("actual_rows"),
+            )
         )
-    return spark.createDataFrame(
-        rows,
-        "join_name string, n_left long, n_right long, max_ndv long, "
-        "est_rows double, actual_rows long",
-    )
+    return rows[0].unionByName(rows[1])
 
 
 _JOIN_CARD_ORACLE = """

@@ -1280,7 +1280,7 @@ def q_bigram_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni_counts = toks.groupBy(F.col("w").alias("w1")).agg(
         F.count(F.lit(1)).alias("c1")
     )
-    n_vocab = uni_counts.count()  # scalar: vocabulary size (bounded)
+    n_vocab = uni_counts.select(F.count(F.lit(1))).scalar()  # vocabulary size
     scored = (
         bigrams.filter(F.col("doc_id") < PPL_DOCS)
         .join(big_counts, ["w1", "w2"])
@@ -1290,7 +1290,7 @@ def q_bigram_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "lp",
             F.round(
-                F.log((F.col("c12") + 1) / (F.col("c1") + F.lit(n_vocab))), 9
+                F.log((F.col("c12") + 1) / (F.col("c1") + n_vocab)), 9
             ),
         )
     )

@@ -184,7 +184,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     doc = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    n_docs = doc.count()  # bounded scalar (one agg), baked as a literal
+    n_docs = doc.select(F.count(F.lit(1))).scalar()
     tok = doc.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
@@ -196,7 +196,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         tf.join(df_, "tok")
         .withColumn(
-            "tfidf", F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6)
+            "tfidf", F.round(F.col("tf") * F.log(n_docs.cast("double") / F.col("df")), 6)
         )
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)

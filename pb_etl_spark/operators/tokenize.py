@@ -3,30 +3,26 @@ table from the corpus (the tokenizer-training step of an LLM data
 pipeline; ``scalar_funcs.q_bpe_token_count`` is the downstream
 apply-side counting).
 
-Scale shape (the reason BPE trains fine on 100 TB): only the FIRST step
-touches the corpus — one explode + grouped count producing the word
-vocabulary with frequencies. Every merge iteration after that operates
-on the VOCAB table (|distinct words|, ~sqrt-ish of corpus mass), looping
-driver-side over k merges:
-
-  pair counts  : one grouped agg over the vocab's adjacent symbol pairs
-                 (weighted by word frequency) — map-side combinable;
-  argmax       : a driver-sized ``first()`` on the ordered pair counts
-                 (deterministic: count desc, then lexicographic pair);
-  apply merge  : Arrow-batched pandas UDF rewriting each word's symbol
-                 array left-to-right (vocab-sized, not corpus-sized);
-  checkpoint   : ``localCheckpoint`` truncates the growing lineage each
-                 round — same discipline as clustering.py's iterative
-                 connected components.
+Scale shape: only the FIRST step touches the corpus — one explode +
+grouped count producing the word vocabulary with frequencies. The
+merges then run in ONE grouped-map pass (``applyInPandas`` over a single
+group) on that vocabulary, which the registered queries bound by the
+``doc_id < 200`` slice (31 distinct words at sf0.001, sf0.01 and sf0.1).
+Per round the pass counts adjacent symbol pairs weighted by word
+frequency, takes the argmax (count desc, then lexicographic pair) and
+rewrites every word with ``_apply_merge``. It emits the merge rows and,
+per word, the token count after the last merge, so the trainer and the
+encoder read one training, and building either frame runs no Spark job.
 
 Determinism: ties broken lexicographically, so the merge table is a pure
 function of the corpus. The exact-equivalence test
 (tests/test_tokenize.py) replays the same algorithm in plain Python and
-must match merge-for-merge; the registered query is rows-only for the
-driver (an iterative argmax loop is not expressible as one SQL oracle).
+must match merge-for-merge.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pandas as pd
 
@@ -50,9 +46,7 @@ def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _apply_merge(syms, a: str, b: str) -> list[str]:
     """Left-to-right non-overlapping replacement of adjacent (a, b) with
-    a+b — the canonical BPE apply step. ONE implementation shared by the
-    trainer's and the encoder's UDFs: the training/apply equivalence
-    depends on both using identical overlap semantics."""
+    a+b — the canonical BPE apply step."""
     merged, i, n = [], 0, len(syms)
     while i < n:
         if i + 1 < n and syms[i] == a and syms[i + 1] == b:
@@ -64,58 +58,54 @@ def _apply_merge(syms, a: str, b: str) -> list[str]:
     return merged
 
 
-def _merge_udf(a: str, b: str):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def apply_merge(sym_col: pd.Series) -> pd.Series:
-        return pd.Series([_apply_merge(list(s), a, b) for s in sym_col])
-
-    return apply_merge
+_TRAINED = "rank long, left string, right string, pair_count long, w string, n_tok long"
 
 
-def learn_bpe_merges(
-    spark: SparkSession, docs: DataFrame, n_merges: int = N_MERGES
-) -> list[tuple[str, str, int]]:
-    """Learn ``n_merges`` BPE merges; returns [(left, right, count)] in
-    merge order."""
-    vocab = word_vocab(docs)
-    cur = vocab.select(
-        "n", F.split(F.col("w"), "").alias("s")
-    ).localCheckpoint(eager=True)
+def _bpe_train(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
+    """One pass of ``n_merges`` BPE rounds over ``docs``' word vocabulary.
+    Rows with a ``rank`` are the merges (left, right, pair_count) in merge
+    order; rows with a ``w`` give that word's token count after the last
+    merge, which equals applying the merges in rank order to the word."""
 
-    pair_expr = F.expr(
-        "transform(sequence(1, size(s) - 1), "
-        "i -> struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))"
+    def train(pdf: pd.DataFrame) -> pd.DataFrame:
+        freq = dict(zip(pdf["w"], pdf["n"]))
+        vocab = {w: list(s) for w, s in zip(pdf["w"], pdf["s"])}
+        merges = []
+        for rank in range(1, n_merges + 1):
+            pairs: Counter = Counter()
+            for w, syms in vocab.items():
+                for pair in zip(syms, syms[1:]):
+                    pairs[pair] += freq[w]
+            if not pairs:
+                break
+            (a, b), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+            merges.append((rank, a, b, c, None, None))
+            vocab = {w: _apply_merge(syms, a, b) for w, syms in vocab.items()}
+        words = [(None, None, None, None, w, len(s)) for w, s in vocab.items()]
+        return pd.DataFrame(
+            merges + words,
+            columns=["rank", "left", "right", "pair_count", "w", "n_tok"],
+        ).astype({"rank": "Int64", "pair_count": "Int64", "n_tok": "Int64"})
+
+    return (
+        word_vocab(docs)
+        .select("w", "n", F.split(F.col("w"), "").alias("s"))
+        .groupBy()
+        .applyInPandas(train, _TRAINED)
     )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        top = (
-            cur.filter(F.size("s") >= 2)
-            .select(F.explode(pair_expr).alias("p"), "n")
-            .groupBy("p")
-            .agg(F.sum("n").alias("c"))
-            .orderBy(F.col("c").desc(), F.col("p.a").asc(), F.col("p.b").asc())
-            .first()
-        )
-        if top is None:
-            break
-        a, b, c = top["p"]["a"], top["p"]["b"], int(top["c"])
-        merges.append((a, b, c))
-        prev = cur
-        cur = cur.withColumn("s", _merge_udf(a, b)(F.col("s"))).localCheckpoint(
-            eager=True
-        )
-        # drop the superseded round's blocks — same discipline as
-        # clustering.py: without this, executor storage pins O(n_merges)
-        # copies of the symbolized vocab
-        prev.unpersist()
-    return merges
 
 
-def _merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
-    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return learn_bpe_merges(spark, docs)
+def learn_bpe_merges(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
+    """The merge table (rank, left, right, pair_count) in merge order."""
+    return (
+        _bpe_train(docs, n_merges)
+        .filter(F.col("rank").isNotNull())
+        .select("rank", "left", "right", "pair_count")
+    )
+
+
+def _slice(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
 
 
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,70 +114,39 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop into SQL CTE stages (see ``_bpe_cte_chain``); exact-equivalence
     vs a plain-Python reference implementation is additionally asserted
     in tests/test_tokenize.py."""
-    merges = _merges_for(spark, sf_dir)
-    return spark.createDataFrame(
-        [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
-        "rank long, left string, right string, pair_count long",
-    )
-
-
-def bpe_encode_udf(merges: list[tuple[str, str]]):
-    """Arrow-batched encoder applying the learned merges in RANK ORDER
-    to each whitespace word (the canonical BPE apply: training order =
-    application priority). The merge list is a driver-side constant
-    (KBs) shipped in the closure — the same pattern as the LSH
-    hyperplanes and PQ codebooks."""
-    from pyspark.sql.functions import pandas_udf
-
-    pairs = [(a, b) for a, b, *_ in merges]
-
-    @pandas_udf("long")
-    def encode_count(text_col: pd.Series) -> pd.Series:
-        def count_tokens(text: str) -> int:
-            total = 0
-            for w in text.split(" "):
-                if not w:
-                    continue
-                syms = list(w)
-                for a, b in pairs:
-                    syms = _apply_merge(syms, a, b)
-                total += len(syms)
-            return total
-
-        return text_col.map(count_tokens)
-
-    return encode_count
+    return learn_bpe_merges(_slice(spark, sf_dir))
 
 
 def q_bpe_encode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLY side: learn the merge table (once, driver-side
-    loop over vocab-sized jobs), then encode every document with it —
-    per-doc BPE token counts plus the compression ratio vs raw
-    characters. The encode pass is embarrassingly parallel (merge table
-    broadcast in the closure; one corpus scan). Hash-checked against
-    the same SQL replay of the trainer (``_bpe_cte_chain``) extended
-    with a per-word encode + per-doc rollup."""
-    docs = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 200)
-        # guard the ratio: an empty/all-space text has 0 char tokens and
-        # would emit a NULL compression
-        .filter(F.length(F.trim(F.col("text"))) > 0)
+    """Tokenizer APPLY side: per-doc BPE token counts plus the
+    compression ratio vs raw characters. The training pass's per-word
+    token counts are joined onto each document's words and summed per
+    document; the characters are the words' lengths summed, i.e. the
+    text without its spaces. Hash-checked against the same SQL replay of
+    the trainer (``_bpe_cte_chain``) extended with a per-word encode +
+    per-doc rollup."""
+    docs = _slice(spark, sf_dir)
+    wtok = _bpe_train(docs).filter(F.col("w").isNotNull()).select("w", "n_tok")
+    # guard the ratio: an empty/all-space text has 0 char tokens and
+    # would emit a NULL compression
+    words = docs.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
     )
-    merges = _merges_for(spark, sf_dir)
-    enc = bpe_encode_udf([(a, b) for a, b, _ in merges])
-    n_char_tokens = F.length(F.regexp_replace(F.col("text"), " ", "")).cast("long")
-    # two-step select: the encode UDF runs ONCE per row (Catalyst does
-    # not CSE duplicate pandas-UDF calls across output columns)
-    return docs.select(
-        "doc_id",
-        enc(F.col("text")).alias("bpe_tokens"),
-        n_char_tokens.alias("char_tokens"),
-    ).select(
-        "doc_id",
-        "bpe_tokens",
-        "char_tokens",
-        F.round(F.col("bpe_tokens") / F.col("char_tokens"), 6).alias("compression"),
+    return (
+        words.join(wtok, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n_tok").alias("bpe_tokens"),
+            F.sum(F.length("w")).cast("long").alias("char_tokens"),
+        )
+        .select(
+            "doc_id",
+            "bpe_tokens",
+            "char_tokens",
+            F.round(F.col("bpe_tokens") / F.col("char_tokens"), 6).alias(
+                "compression"
+            ),
+        )
     )
 
 

@@ -39,8 +39,8 @@ BNLJ_WHITELIST = {
     "maxabs_normalize",  # 1-row global-aggregate crossJoin (fit constants)
     "zscore_normalize",  # same shape: 1-row (mean, stddev) crossJoin
     # (pagerank_knn / triangle_count_knn: their PR_NODES-bounded kNN
-    #  edge-build BNLJ now runs inside an eager localCheckpoint job, so
-    #  it no longer appears in the registered plan)
+    #  edge-build BNLJ runs inside an eager localCheckpoint job at build
+    #  time — see BUILD_JOBS_WHITELIST — so it is not in the plan)
     "bm25_topk",  # 1-row corpus-stats (N, avgdl) crossJoin
     "psi_drift",  # 1-row (tot_a, tot_b) totals crossJoin over the
     #   ≤|buckets| counts frame
@@ -356,15 +356,66 @@ def test_width_source_whitelist_is_not_stale():
 
 
 # One full-registry plan walk under a sentinel shuffle-partitions
-# setting serves BOTH width rules below (building ~300 plans — some of
-# which run driver-side offset-collect jobs — is the expensive part;
-# the rule checks are string scans). 96 is chosen to (a) differ from
+# setting serves BOTH width rules below and the build-jobs rule
+# (building ~300 plans is the expensive part; the rule checks are
+# string scans and job counts). 96 is chosen to (a) differ from
 # defaultParallelism and every fixture width, and (b) exceed the
 # 64-entry literal-map threshold, so a reintroduced
 # O(shuffle.partitions)-wide CreateMap probe (the r13→r14 verdict
 # item 1 class) is visible at the sentinel width.
 _SENTINEL = "96"
 _sentinel_plans_cache: dict[str, str] = {}
+_sentinel_build_jobs: dict[str, int] = {}
+
+# Building a registered frame launches no Spark job: plan-only consumers
+# (these sweeps, tools/capture_plans.py) then pay for analysis alone, and
+# the build/action split of a query's time stays clean. An entry names a
+# query whose build must act, and why.
+BUILD_JOBS_WHITELIST: dict[str, str] = {
+    "sql_scripting_threshold": "its driver-side control flow is the feature",
+    "dedup_clusters": "connected components run until the labels stop "
+    "changing, which depends on the data",
+    "dedup_representatives": "the same connected-components loop",
+    "shingle_containment_pairs": "counts its pinned shingle table up front "
+    "on purpose",
+    "dynamic_partition_pruning": "DPP needs a plain literal threshold, and "
+    "the partitioned read lists files",
+    "ann_ivf_topk": "its trained centroids are shipped in a closure",
+    "ann_pq_topk": "its trained codebooks are shipped in a closure",
+    "sprt_decision": "bakes a |variants|-entry offset map",
+    "asof_join": "freezes a nondeterministic row id before the plan branches",
+    "session_variable_agg": "SET VAR runs a job",
+    "partition_pruned_scan": "the partitioned read lists its directory",
+    "binaryfile_ingest": "the binaryFile read lists its directory",
+    # a frame that several legs share stays an eager localCheckpoint where
+    # cache.pin measured slower (build+collect, min of 6-8 interleaved
+    # runs at sf0.01, 4 cores)
+    "dsir_weights": "checkpoints its bucket model: pinned 0.67 s vs 0.56 s",
+    "vocab_drift": "checkpoints its token cells and collects their two "
+    "totals: pinned 0.63 s vs 0.45 s; scalar totals ~0.1 s slower (median)",
+    "pagerank_knn": "checkpoints its kNN edges and nodes: pinned 1.27 s vs "
+    "1.12 s",
+    "triangle_count_knn": "checkpoints its undirected edges: pinned 0.99 s "
+    "vs 0.82 s",
+    "kmv_distinct_sketch": "checkpoints its (source, token) set: pinned "
+    "0.69 s vs 0.58 s",
+}
+
+
+def _warm_reads(spark) -> None:
+    """Pay the once-per-JVM and once-per-fixture costs up front, so a
+    build's job count is its own: the first read of a table runs a
+    schema job, and the bucketed and ORC copies are written once."""
+    from pathlib import Path
+
+    from pb_etl_spark.catalog import read_table
+    from pb_etl_spark.operators.bucketing import bucketed_tables
+    from pb_etl_spark.operators.layout import orc_orders_path
+
+    for table in sorted(Path(SF_DIR).glob("*.parquet")):
+        read_table(spark, SF_DIR, table.stem)
+    bucketed_tables(spark, SF_DIR)
+    orc_orders_path(spark, SF_DIR)
 
 
 def _sentinel_plans(spark) -> dict[str, str]:
@@ -383,12 +434,21 @@ def _sentinel_plans(spark) -> dict[str, str]:
         # completed: a mid-loop failure would otherwise leave a partial
         # cache that the OTHER width lint silently accepts as complete,
         # never linting the unbuilt remainder (review finding)
+        _warm_reads(spark)
+        sc = spark.sparkContext
         built: dict[str, str] = {}
+        jobs: dict[str, int] = {}
         for name, fn in _batch_queries().items():
-            built[name] = (
-                fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-            )
+            group = f"sentinel-build-{name}"
+            sc.setJobGroup(group, group)
+            try:
+                df = fn(spark, SF_DIR)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            built[name] = df._jdf.queryExecution().executedPlan().toString()
         _sentinel_plans_cache.update(built)
+        _sentinel_build_jobs.update(jobs)
     finally:
         spark.conf.set(key, prev)
         # symmetric: don't serve sentinel-width caches to later tests
@@ -415,6 +475,34 @@ def test_no_core_count_sized_exchange_in_any_registered_plan(spark):
         f"core-count-sized exchange under a {_SENTINEL}-partition session "
         f"(route the width through operators._width.fanout_width): {offenders}"
     )
+
+
+def test_building_a_registered_query_launches_no_job(spark):
+    """Each batch query's frame is built under its own job group in the
+    sentinel walk; outside BUILD_JOBS_WHITELIST the build must launch 0
+    jobs (a collected scalar becomes a ``DataFrame.scalar()`` subquery,
+    and a frame several legs share is a ``cache.pin`` unless a pin
+    measured slower)."""
+    _sentinel_plans(spark)
+    offenders = {
+        name: n
+        for name, n in _sentinel_build_jobs.items()
+        if n and name not in BUILD_JOBS_WHITELIST
+    }
+    assert not offenders, f"Spark jobs launched while building: {offenders}"
+
+
+def test_build_jobs_whitelist_is_not_stale(spark):
+    """Every whitelisted query must still exist and still launch a job
+    while it is built, or the exemption silently rots."""
+    _sentinel_plans(spark)
+    for name in BUILD_JOBS_WHITELIST:
+        assert name in _sentinel_build_jobs, f"{name} no longer registered"
+        if not _sentinel_build_jobs[name]:
+            pytest.fail(
+                f"{name} no longer launches a job while built — remove it "
+                "from BUILD_JOBS_WHITELIST"
+            )
 
 
 # No registered plan may probe a literal map wider than this: GetMapValue

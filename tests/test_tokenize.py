@@ -44,7 +44,10 @@ def test_bpe_merges_match_python_reference(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
         F.col("doc_id") < 100
     )
-    got = learn_bpe_merges(spark, docs, n_merges=8)
+    got = [
+        (r.left, r.right, r.pair_count)
+        for r in learn_bpe_merges(docs, n_merges=8).collect()
+    ]
 
     counts = {
         r.w: r.n for r in word_vocab(docs).collect()
