@@ -150,6 +150,20 @@ def auc_rank(scored: DataFrame, label_col: str = "label", p_col: str = "p") -> f
     )
 
 
+def _reload_without_summary(model, path: str):
+    """Save the fitted pipeline to ``path`` — its one artifact — and load
+    it back, so the returned model carries no training summary. It must
+    shed the summary before ANY scoring job: the summary holds a
+    sparkSession reference, and once df.observe has run anywhere in the
+    process (e.g. a streaming drain or a guarded parquet write) the
+    session's non-serializable ObservationManager fails every closure
+    that drags the summary in (Spark 4.1)."""
+    from pyspark.ml import PipelineModel
+
+    model.write().overwrite().save(path)
+    return PipelineModel.load(path)
+
+
 def train_quality_model(doc: DataFrame, path: str, seed: int = 42):
     """Fit on a seeded 80/20 split, save the model to ``path``; returns
     (model loaded from ``path``, held-out AUC)."""
@@ -160,15 +174,7 @@ def train_quality_model(doc: DataFrame, path: str, seed: int = 42):
         labeled.select("doc_id", "label"), "doc_id"
     )
     train, val = feats.randomSplit([0.8, 0.2], seed=seed)
-    model = build_quality_pipeline(seed).fit(train)
-    # shed the trainingSummary before ANY scoring job: the summary holds
-    # a sparkSession reference, and once df.observe has run anywhere in
-    # the process (e.g. a streaming drain) the session's non-serializable
-    # ObservationManager fails every closure that drags the summary in —
-    # the documented Spark 4.1 trap from ml/pipeline.train_model
-    from pb_etl_spark.ml.pipeline import _reload_without_summary
-
-    model = _reload_without_summary(model, path)
+    model = _reload_without_summary(build_quality_pipeline(seed).fit(train), path)
     scored = model.transform(val).select(
         "label", vector_to_array("probability").getItem(1).alias("p")
     )

@@ -35,7 +35,7 @@ from pb_etl_spark.plans.stages import Stage, StageRunner
 from pb_etl_spark.schemas import KEY_COL, LABEL_COL, NORM_COLS
 from pb_etl_spark.sources.parquet import read_parquet, write_parquet
 
-MODEL_SUBDIR = "model"
+SCORECARD_FILE = "scorecard.json"
 METRICS_FILE = "metrics.json"
 
 
@@ -59,39 +59,36 @@ def _norm_denominators(spark: SparkSession, out: str, deps: dict[str, str]) -> N
 
 def _fit_model(spark: SparkSession, out: str, deps: dict[str, str], seed: int) -> None:
     """FitNNModel (tasks.py:247-345): normalize train, fit the classifier,
-    save model + metrics under the salted stage directory."""
+    write its scorecard and metrics under the salted stage directory."""
     train = read_parquet(spark, deps["load_data"])
     maxes = read_parquet(spark, deps["norm_denominators"])
     normalized = apply_maxabs(train, maxes, NORM_COLS)
-    _, metrics = train_model(normalized, f"{out}/{MODEL_SUBDIR}", seed=seed)
-    # metrics sidecar (reference model_hist_params, tasks.py:334-342) — a
-    # plain local file: one row through a Spark job would create a
-    # DIRECTORY named metrics.json that json.load can't open
+    card, metrics = train_model(normalized, seed=seed)
+    # the scorecard (S7 artifact) and the metrics sidecar (reference
+    # model_hist_params, tasks.py:334-342) are plain local files: one row
+    # through a Spark job would create a DIRECTORY that json.load can't open
     os.makedirs(out, exist_ok=True)
-    with open(os.path.join(out, METRICS_FILE), "w") as fh:
-        json.dump(metrics, fh)
-    # the model dir write emits its own _SUCCESS under MODEL_SUBDIR; mark
-    # the stage dir complete explicitly
+    for name, obj in ((SCORECARD_FILE, card), (METRICS_FILE, metrics)):
+        with open(os.path.join(out, name), "w") as fh:
+            json.dump(obj, fh)
     _touch_success(out)
 
 
 def _touch_success(path: str) -> None:
-    import os
-
     os.makedirs(path, exist_ok=True)
     open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
 def _predict(spark: SparkSession, out: str, deps: dict[str, str]) -> None:
     """NNPredict (tasks.py:348-392): normalize test with TRAIN denominators
-    (fit/transform), score distributed, persist {TRANSACTION_ID, Y_hat}."""
-    from pyspark.ml import PipelineModel
-
+    (fit/transform), score it with fit_model's scorecard in one SQL
+    projection, persist {TRANSACTION_ID, Y_hat}."""
     test = read_parquet(spark, deps["load_test"])
     maxes = read_parquet(spark, deps["norm_denominators"])
     normalized = apply_maxabs(test, maxes, NORM_COLS)
-    model = PipelineModel.load(f"{deps['fit_model']}/{MODEL_SUBDIR}")
-    write_parquet(score(model, normalized, KEY_COL), out)
+    with open(os.path.join(deps["fit_model"], SCORECARD_FILE)) as fh:
+        card = json.load(fh)
+    write_parquet(score(card, normalized, KEY_COL), out)
 
 
 def _backtest(spark: SparkSession, out: str, deps: dict[str, str], root: str | None) -> None:
@@ -146,7 +143,9 @@ def build_graph(root: str | None = None, seed: int = 42, version: str = "1.0") -
         lambda sp, out, deps: _fit_model(sp, out, deps, seed),
         version=version,
         deps={"load_data": load_data, "norm_denominators": norm},
-        params={"seed": seed},
+        # the artifact format is salted: a workdir whose fit_model holds
+        # another format re-fits rather than feed it to predict
+        params={"seed": seed, "artifact": "scorecard"},
     )
     predict = Stage(
         "predict",

@@ -10,9 +10,9 @@ import os
 
 import pytest
 
-from pb_etl_spark.pipeline import METRICS_FILE, MODEL_SUBDIR, build_graph, run_pipeline
-from pb_etl_spark.plans.stages import StageRunner
-from pb_etl_spark.schemas import CAT_COLS, NORM_COLS
+from pb_etl_spark.pipeline import METRICS_FILE, SCORECARD_FILE, build_graph, run_pipeline
+from pb_etl_spark.plans.stages import Stage, StageRunner
+from pb_etl_spark.schemas import CAT_COLS, KEY_COL, NORM_COLS, NUM_COLS
 from pb_etl_spark.sources.parquet import dataset_exists, read_parquet
 from tests.fixtures import write_fixtures
 
@@ -91,16 +91,81 @@ def test_backtest_and_report(spark, pipeline_run):
     assert 0.0 < report["expected"] < 1.0
 
 
-def test_model_is_one_indexer_over_all_categoricals(pipeline_run):
-    from pyspark.ml import PipelineModel
-    from pyspark.ml.feature import StringIndexerModel
+def _normalized_train(spark, pipeline_run):
+    """The train split fit_model fits on, rebuilt from its stage inputs,
+    and the norm denominators it was normalized with."""
+    from pb_etl_spark.ml.pipeline import split_train_val
+    from pb_etl_spark.operators.normalize import apply_maxabs
 
-    model = PipelineModel.load(f"{_stage_path(pipeline_run, 'fit_model')}/{MODEL_SUBDIR}")
-    assert len(model.stages) == 4
-    indexers = [s for s in model.stages if isinstance(s, StringIndexerModel)]
-    assert len(indexers) == 1
-    assert indexers[0].getInputCols() == CAT_COLS
-    assert indexers[0].getOutputCols() == [f"{c}__idx" for c in CAT_COLS]
+    maxes = read_parquet(spark, _stage_path(pipeline_run, "norm_denominators"))
+    train = read_parquet(spark, _stage_path(pipeline_run, "load_data"))
+    return split_train_val(apply_maxabs(train, maxes, NORM_COLS), seed=42)[0], maxes
+
+
+def test_scorecard_matches_the_fitted_indexer(spark, pipeline_run):
+    """fit_model's artifact is a scorecard: the intercept, one weight per
+    numeric column and, per categorical, one weight per label of the
+    multi-column indexer fitted on the same train split, plus an unknown
+    weight."""
+    from pb_etl_spark.ml.pipeline import build_pipeline
+
+    with open(os.path.join(_stage_path(pipeline_run, "fit_model"), SCORECARD_FILE)) as fh:
+        card = json.load(fh)
+    train, _ = _normalized_train(spark, pipeline_run)
+    indexer = build_pipeline().getStages()[0].fit(train)
+    assert list(card["numeric"]) == NUM_COLS
+    assert list(card["categorical"]) == CAT_COLS
+    assert [list(c["weights"]) for c in card["categorical"].values()] == indexer.labelsArray
+    weights = [card["intercept"], *card["numeric"].values()]
+    for c in card["categorical"].values():
+        weights += [*c["weights"].values(), c["unknown"]]
+    assert all(isinstance(w, float) and math.isfinite(w) for w in weights)
+
+
+def test_scorecard_scores_bit_identical_to_the_fitted_pipeline(spark, pipeline_run, tmp_path):
+    """score(scorecard) reproduces PipelineModel.transform's probability
+    bit for bit, also for an unseen category, a null categorical and a
+    null numeric value."""
+    from functools import reduce
+
+    from pyspark.ml.functions import vector_to_array
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from pb_etl_spark.ml.pipeline import _impute_numeric, build_pipeline, score, scorecard
+    from pb_etl_spark.ml.quality_model import _reload_without_summary
+    from pb_etl_spark.operators.normalize import apply_maxabs
+
+    train, maxes = _normalized_train(spark, pipeline_run)
+    # nulls in training give the unknown slots of TLD and COUNTRY nonzero
+    # weights, so the edge rows below score through a live unknown weight
+    nulled = F.when(F.col(KEY_COL) % 7 == 0, None)
+    train = train.withColumns({c: nulled.otherwise(F.col(c)) for c in ("TLD", "COUNTRY")})
+    model = build_pipeline().fit(train)
+    card = scorecard(model)
+    assert all(card["categorical"][c]["unknown"] != 0.0 for c in ("TLD", "COUNTRY"))
+    # shed the training summary before transform runs a job
+    model = _reload_without_summary(model, str(tmp_path / "model"))
+
+    test = apply_maxabs(read_parquet(spark, _stage_path(pipeline_run, "load_test")), maxes, NORM_COLS)
+    first = test.orderBy(KEY_COL).limit(1)
+
+    def edge(key, col, value):
+        return first.withColumn(KEY_COL, F.lit(key).cast("long")).withColumn(
+            col, F.lit(value).cast(test.schema[col].dataType)
+        )
+
+    edges = {-1: ("TLD", "never-seen"), -2: ("COUNTRY", None), -3: ("REN", None)}
+    df = reduce(DataFrame.unionByName, [edge(k, *v) for k, v in edges.items()], test)
+    got = {r[KEY_COL]: r["Y_hat"].hex() for r in score(card, df, KEY_COL).collect()}
+    want = {
+        r[KEY_COL]: r["p"].hex()
+        for r in model.transform(_impute_numeric(df, NUM_COLS))
+        .select(KEY_COL, vector_to_array("probability")[1].alias("p"))
+        .collect()
+    }
+    assert set(edges) <= set(got)
+    assert got == want
 
 
 def test_multi_column_indexer_matches_single_column_indexers(spark, pipeline_run):
@@ -120,10 +185,10 @@ def test_multi_column_indexer_matches_single_column_indexers(spark, pipeline_run
 
 
 def test_fit_and_predict_job_ceilings(spark, pipeline_run, tmp_path):
-    """A cold DAG run, each stage body under its own job group. With one
-    multi-column indexer and the model written once, fit_model runs 57
-    jobs at the fixture size and predict 19; ten per-column indexers
-    with a temp-dir round trip and a second save ran 164 and 55."""
+    """A cold DAG run, each stage body under its own job group. fit_model
+    writes a JSON scorecard and predict scores it in one projection, so
+    neither runs a Spark ML save or load; with a saved and reloaded
+    PipelineModel they ran 57 and 19 jobs at the fixture size."""
     sc = spark.sparkContext
     group = f"ceiling-{os.path.basename(tmp_path)}"
     terminal = build_graph(root=pipeline_run["root"], seed=42)
@@ -144,16 +209,13 @@ def test_fit_and_predict_job_ceilings(spark, pipeline_run, tmp_path):
     }
     # fit_model: two input reads, one indexer-fit job, broadcasts and
     # split counts, one job per LR iteration (14 here; the only
-    # data-dependent term), one save (8 jobs) and one load (15) of the
-    # 4-stage model, and two AUC evaluations of 3 jobs each. 60 admits a
-    # few more LR iterations, but not a second save or load of the model
-    # or an indexer per column
-    assert jobs["fit_model"] <= 60, jobs
-    # predict: two input reads, one load of the 4-stage model (15 jobs)
-    # and the scoring write (2). Each stage with data adds 4 load jobs,
-    # so a fifth one crosses the ceiling; the 13-stage model's load
-    # alone took 51
-    assert jobs["predict"] <= 20, jobs
+    # data-dependent term) and two AUC evaluations of 3 jobs each: 34.
+    # 36 admits a few more LR iterations, but not a model save (8 jobs),
+    # a load (15) or an indexer per column
+    assert jobs["fit_model"] <= 36, jobs
+    # predict: two input reads and the scoring write (2): 4. A load of
+    # the 4-stage model alone took 15
+    assert jobs["predict"] <= 6, jobs
 
 
 def test_metrics_sidecar(pipeline_run):
@@ -203,6 +265,19 @@ def test_version_bump_cascades(spark, pipeline_run):
     assert find(g1, "load_data").salt() == find(g3, "load_data").salt()
     assert find(g1, "fit_model").salt() != find(g3, "fit_model").salt()
     assert find(g1, "backtest").salt() != find(g3, "backtest").salt()
+
+    # the artifact format is salted: a fit_model stage without it (a
+    # workdir holding another format) is not reused, nor is anything
+    # downstream of it
+    fit = find(g1, "fit_model")
+    other = Stage(fit.name, fit.fn, version=fit.version, deps=fit.deps, params={"seed": 42})
+    assert fit.params == {"seed": 42, "artifact": "scorecard"}
+    assert other.salt() != fit.salt()
+    predict = find(g1, "predict")
+    assert Stage(
+        predict.name, predict.fn, version=predict.version,
+        deps={**predict.deps, "fit_model": other},
+    ).salt() != predict.salt()
 
 
 def test_salt_determinism(pipeline_run):
