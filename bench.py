@@ -107,7 +107,7 @@ HEADLINE = [
     "entity_golden_record",
     "dynamic_partition_pruning",
     # round-4 new operators, tracked before the driver ever times them:
-    # basket self-join, interaction-matrix self-join, 3x global_positions,
+    # basket self-join, interaction-matrix self-join, 3-quintile running sum,
     # sketch insert path, unrolled greedy re-rank, iterative peel
     "association_rules",
     "item_item_cosine",

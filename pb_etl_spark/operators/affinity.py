@@ -22,11 +22,13 @@ Scale design, per operator:
   broadcast. All sums are integer (quantity grid); only the final cosine
   divides as double.
 - ``rfm_segments``: per-customer Recency/Frequency/Monetary from one
-  grouped pass over orders, then three exact quintile assignments via
-  ``global_positions`` (the distributed row-number primitive —
-  range-partition + per-partition row_number + broadcast-back offsets; NO
-  single-partition global window). Every emitted column is an integer —
-  cross-engine hash parity needs no float reasoning at all.
+  grouped pass over orders, then all three exact quintiles in ONE
+  ``exact_quintiles`` pass: the metrics are stacked into one row per
+  (score, customer) and ranked by ``grouped_running_sum`` grouped by
+  score name (range partition + per-partition running count +
+  broadcast-back offsets; NO single-partition global window). Every
+  emitted column is an integer — cross-engine hash parity needs no
+  float reasoning at all.
 - ``target_encoding``: the leakage-safe categorical encoder (smoothed
   category mean toward the global prior). Aggregates are integer cents;
   the encoding is one double chain per category over a ≤ |categories|
@@ -51,30 +53,33 @@ TE_PRIOR_WEIGHT = 20.0
 RFM_BUCKETS = 5
 
 
-def exact_quintile(
-    spark, df, value_col: str, key_col: str, out: str, asc: bool = True
-):
-    """Exact rank-based quintile 1..5 over (value, key) via the
-    distributed ``global_positions`` primitive — the ONE place the
-    integer `div` bucket formula lives (its DuckDB twin is
-    `1 + ((ROW_NUMBER() - 1) * 5) // n`); used by rfm_segments and
-    segment_migration. ``asc=False`` ranks descending (high value →
-    low quintile), which is how recency scores invert."""
-    from pb_etl_spark.operators.corpus import global_positions
+def exact_quintiles(spark, stacked: DataFrame, key_col: str, outs: list[str]):
+    """Exact rank-based quintiles 1..5 for several populations in ONE
+    grouped pass — the one place the integer bucket formula
+    ``1 + ((pos - 1) * 5) div n`` lives (its DuckDB twin is
+    ``1 + ((ROW_NUMBER() - 1) * 5) // n``).
 
-    # the helper's order columns are ascending names by contract (r15:
-    # the span guard compares range keys with plain struct ordering), so
-    # DESC is expressed by negating the integer metric — order-isomorphic
-    # for the long-typed RFM metrics, and ties still break on key ASC
-    ord_col = F.col(value_col) if asc else -F.col(value_col)
-    pos_df = global_positions(
+    ``stacked`` holds one row per (output name ``_q``, key) with the
+    bigint rank value ``_q_ord`` (ascending; negate it for DESC — ties
+    break on ``key_col`` ASC) plus any columns that are constant per
+    key. Positions come from ``grouped_running_sum`` over a constant 1
+    grouped by ``_q``, so populations of different sizes each get their
+    own n. The result has one row per key: ``key_col``, the carried
+    columns, and one score column per name in ``outs`` (NULL where the
+    key is absent from that population)."""
+    from pb_etl_spark.operators.corpus import grouped_running_sum
+
+    carried = [c for c in stacked.columns if c not in (key_col, "_q", "_q_ord")]
+    ranked = grouped_running_sum(
         spark,
-        df.select(F.col(key_col), ord_col.cast("long").alias("_q_ord")),
+        stacked.withColumn("_q_one", F.lit(1)),
+        ["_q"],
         ["_q_ord", key_col],
+        "_q_one",
     )
-    return pos_df.select(
-        key_col,
-        F.expr(f"1L + ((pos - 1) * {RFM_BUCKETS}) div _gp_tot").alias(out),
+    score = F.expr(f"1L + ((cum - 1) * {RFM_BUCKETS}) div gtot")
+    return ranked.groupBy(key_col, *carried).agg(
+        *[F.max(F.when(F.col("_q") == o, score)).alias(o) for o in outs]
     )
 
 
@@ -211,17 +216,16 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     quintiles 1..5 (5 = best), segment = r·100 + f·10 + m.
 
     Quintiles are EXACT (rank-based: score = 1 + (pos-1)·5 div n over
-    the total order (metric, custkey)) and computed with
-    ``global_positions`` — three range-partitioned distributed
-    row-numbers, no single-partition window. Every output column is an
-    integer: no float appears anywhere in the query."""
+    the total order (metric, custkey)) and all three come from one
+    ``exact_quintiles`` pass over the metrics stacked per customer, which
+    carries the metrics along so the scores pivot back without a join;
+    no single-partition window. Every output column is an integer: no
+    float appears anywhere in the query."""
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
     mx = orders.select(F.max("o_orderdate").alias("mxd"))
-    # pinned: three quintile scorers + the final join all consume the
-    # per-customer aggregate — one computation, not four
-    rfm = pin(
+    rfm = (
         orders.crossJoin(F.broadcast(mx))
         .groupBy(F.col("o_custkey").alias("c"))
         .agg(
@@ -232,33 +236,39 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
                 "monetary_cents"
             ),
+        )
+    )
+    # one stacked row per (score, customer), carrying the three metrics
+    # so the scores pivot back without a join. Recency: fewer days =
+    # better = score 5, so it ranks DESC (negated) and the most recent
+    # customers take the largest positions (highest quintile)
+    stacked = rfm.select(
+        "*",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(out).alias("_q"), ord_.cast("long").alias("_q_ord"))
+                    for out, ord_ in (
+                        ("r_score", -F.col("recency_days")),
+                        ("f_score", F.col("frequency")),
+                        ("m_score", F.col("monetary_cents")),
+                    )
+                ]
+            )
         ),
     )
-
-    def quintile(df: DataFrame, metric: str, asc: bool, out: str) -> DataFrame:
-        return exact_quintile(spark, df, metric, "c", out, asc=asc)
-
-    # recency: fewer days = better = score 5 → order DESC so the most
-    # recent customers take the largest positions (highest quintile)
-    r = quintile(rfm, "recency_days", asc=False, out="r_score")
-    f_ = quintile(rfm, "frequency", asc=True, out="f_score")
-    m = quintile(rfm, "monetary_cents", asc=True, out="m_score")
-    return (
-        rfm.join(r, "c")
-        .join(f_, "c")
-        .join(m, "c")
-        .select(
-            F.col("c").alias("c_custkey"),
-            "recency_days",
-            "frequency",
-            "monetary_cents",
-            "r_score",
-            "f_score",
-            "m_score",
-            (F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score")).alias(
-                "segment"
-            ),
-        )
+    scored = exact_quintiles(spark, stacked, "c", ["r_score", "f_score", "m_score"])
+    return scored.select(
+        F.col("c").alias("c_custkey"),
+        "recency_days",
+        "frequency",
+        "monetary_cents",
+        "r_score",
+        "f_score",
+        "m_score",
+        (F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score")).alias(
+            "segment"
+        ),
     )
 
 
@@ -629,35 +639,24 @@ def q_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer segment-migration matrix: monetary quintile in the
     EARLY period (orders before SEG_SPLIT_DATE) vs the LATE period,
     counted over customers active in both — the upgrade/downgrade flow
-    behind retention programs. Quintiles are exact rank-based
-    (global_positions per period, integer arithmetic); the matrix is a
-    ≤ 5×5 grouped count."""
-    from pb_etl_spark.operators.corpus import global_positions
-
+    behind retention programs. One aggregate yields each customer's
+    spend per period; both periods' exact rank-based quintiles come from
+    one ``exact_quintiles`` pass grouped by period, so each period ranks
+    over its own population (integer arithmetic). The matrix is a ≤ 5×5
+    grouped count."""
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
-
-    def period_quintile(df, out):
-        spend = df.groupBy(F.col("o_custkey").alias("c")).agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "cents"
-            )
-        )
-        return exact_quintile(spark, spend, "cents", "c", out)
-
-    early = period_quintile(
-        orders.filter(F.col("o_orderdate") < F.lit(SEG_SPLIT_DATE).cast("timestamp")),
-        "from_q",
-    )
-    late = period_quintile(
-        orders.filter(
-            F.col("o_orderdate") >= F.lit(SEG_SPLIT_DATE).cast("timestamp")
-        ),
-        "to_q",
+    early = F.col("o_orderdate") < F.lit(SEG_SPLIT_DATE).cast("timestamp")
+    stacked = orders.filter(F.col("o_orderdate").isNotNull()).groupBy(
+        F.col("o_custkey").alias("c"),
+        F.when(early, "from_q").otherwise("to_q").alias("_q"),
+    ).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("_q_ord")
     )
     return (
-        early.join(late, "c")
+        exact_quintiles(spark, stacked, "c", ["from_q", "to_q"])
+        .filter(F.col("from_q").isNotNull() & F.col("to_q").isNotNull())
         .groupBy("from_q", "to_q")
         .agg(F.count(F.lit(1)).alias("n_customers"))
     )

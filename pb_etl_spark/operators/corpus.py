@@ -45,6 +45,7 @@ from pyspark.sql.window import Window as W
 
 from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table
+from pb_etl_spark.operators.similarity import _let
 from pb_etl_spark.operators.text import STOPWORDS
 
 PACK_BUDGET = 512  # tokens per packed training sequence
@@ -399,8 +400,8 @@ def _guard_key_struct(key_cols: list[str]):
     field-by-field, matching the range partitioner's lexicographic
     order). Key columns must be plain ASCENDING column names — a
     descending sort is expressed by negating the column at the call
-    site (see affinity.exact_quintile) so the span guard can compare
-    keys with plain struct ordering."""
+    site (see affinity.q_rfm_segments' recency) so the span guard can
+    compare keys with plain struct ordering."""
     for c in key_cols:
         if not isinstance(c, str):
             raise TypeError(
@@ -444,17 +445,14 @@ def _pid_pinned(df: DataFrame, nparts: int, key_cols: list[str]) -> DataFrame:
 
 def _drift_raise(label: str, key_expr):
     """A broadcast-back offset/total is only trusted when the row's
-    range key falls inside ITS partition's counts-leg span (r15: the
-    offsets now ride the SAME one-action plan instead of driver-side
-    literals). Both legs read the one lazily pinned range-partitioned
-    frame (see ``_pid_pinned`` for why the pin is load-bearing), so the
-    guard never fires in a healthy plan; if the legs ever saw different
-    layouts, any row whose partition assignment differs lands outside
-    its counts-leg [min,max] span (range spans are disjoint and
-    ordered), or in a partition with no counts row at all (NULL after
-    the left join) — both reach this raise instead of silently
-    corrupting positions (ADVICE r09's loud-miss contract, carried
-    over)."""
+    range key falls inside ITS slice's counts-leg span. Both legs read
+    the one lazily pinned range-partitioned frame (see ``_pid_pinned``
+    for why the pin is load-bearing), so the guard never fires in a
+    healthy plan; if the legs ever saw different layouts, any row whose
+    partition assignment differs lands outside its counts-leg [min,max]
+    span (range spans are disjoint and ordered), or in a partition with
+    no counts row at all (NULL after the left join) — both reach this
+    raise instead of silently corrupting positions."""
     return F.raise_error(
         F.concat(
             F.lit(f"{label}-span miss (range boundary drift?) for key "),
@@ -463,81 +461,12 @@ def _drift_raise(label: str, key_expr):
     ).cast("long")
 
 
-def global_positions(spark: SparkSession, df: DataFrame, order_cols: list[str]) -> DataFrame:
-    """Total-order positions (1-based ``pos``) over ``order_cols``
-    WITHOUT a single-partition global window — the distributed
-    row-number primitive behind the epoch shuffle and exact ntile.
-
-    Shape (ONE action since r15 — r14 verdict item 1): range-partition
-    on the order key (Spark samples boundaries) into a lazily-pinned
-    frame (``_pid_pinned`` — the pin is a correctness device, see its
-    docstring), aggregate per-partition (count, min-key, max-key) as a
-    ≤|partitions|-row side leg of the SAME plan, prefix-sum the counts
-    with a window over that bounded leg, broadcast-join the offsets
-    back on the partition id, and add them to a per-partition
-    row_number. The r01-r14 form instead ran an EAGER counts job at
-    frame-build time and baked the offsets as plan literals — one extra
-    Spark job, an AQE planning session and a py4j round-trip per
-    invocation (~40% of every consumer's wall time at bench scale, r15
-    profile), all gone here; the materialization cost itself is
-    unchanged (one cache write, as before). Correctness does NOT depend
-    on exchange/stage reuse firing — both legs read the one pinned
-    layout — and the span guard (``_drift_raise``) turns any residual
-    inconsistency into a loud error, never silent corruption.
-
-    ``order_cols`` must be ascending column NAMES forming a total order
-    (include a tiebreak column; negate numeric columns for DESC) with
-    non-null values. The output carries every input column plus ``pos``
-    and ``_gp_tot`` (the total row count as a plan column — consumers
-    that used the old driver-side scalar now fold the same integer
-    arithmetic in-plan; the values are identical)."""
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    okey = _guard_key_struct(order_cols)
-    keyed = _pid_pinned(df, nparts, order_cols)
-    counts = keyed.groupBy("_rs_pid").agg(
-        F.count(F.lit(1)).alias("_rs_n"),
-        F.min(okey).alias("_rs_lo"),
-        F.max(okey).alias("_rs_hi"),
-    )
-    # prefix-sum over the ≤|partitions|-row counts leg: the
-    # SinglePartition exchange under these windows is bounded by
-    # construction (tests/test_plan_lint.py exempts _rs_pid-ordered
-    # unpartitioned windows for exactly this reason)
-    w_off = W.orderBy("_rs_pid").rowsBetween(W.unboundedPreceding, -1)
-    w_all = W.orderBy("_rs_pid").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    offs = counts.select(
-        "_rs_pid",
-        "_rs_lo",
-        "_rs_hi",
-        F.coalesce(F.sum("_rs_n").over(w_off), F.lit(0))
-        .cast("long")
-        .alias("_rs_off"),
-        F.sum("_rs_n").over(w_all).cast("long").alias("_gp_tot"),
-    )
-    w = W.partitionBy("_rs_pid").orderBy(*order_cols)
-    span_ok = (okey >= F.col("_rs_lo")) & (okey <= F.col("_rs_hi"))
-    return (
-        keyed.withColumn("_rs_rn", F.row_number().over(w).cast("long"))
-        .join(F.broadcast(offs), "_rs_pid", "left")
-        .withColumn(
-            "pos",
-            F.when(span_ok, F.col("_rs_rn") + F.col("_rs_off")).otherwise(
-                _drift_raise("global_positions offset", okey)
-            ),
-        )
-        .select(*df.columns, "pos", "_gp_tot")
-    )
-
-
 def _null_value_raise(value_col: str, label: str):
     """The value column must be non-null (the windowed prefix sum and
     the counts-leg subtotal must agree exactly; a leading all-NULL frame
-    would silently NULL ``cum``). r01-r14 enforced this driver-side on
-    the collected counts; the one-action form enforces it in-plan: the
-    counts leg carries count(1) vs count(value) per slice, and any row
-    of a violating slice raises at action time."""
+    would silently NULL ``cum``). The counts leg carries count(1) vs
+    count(value) per slice, and every row raises at action time if any
+    slice violates the contract."""
     return F.raise_error(
         F.lit(
             f"{label}: value column {value_col!r} has NULL value(s) "
@@ -546,87 +475,176 @@ def _null_value_raise(value_col: str, label: str):
     ).cast("long")
 
 
+def _seg_scan_sql(xs: str, keys: str, back: bool = False) -> str:
+    """SQL text of the INCLUSIVE segmented prefix sum of the bigint array
+    ``xs`` — a suffix sum when ``back`` — restarting wherever the
+    parallel array ``keys`` (equal keys contiguous) changes. Log-step
+    doubling: after the step with stride d every element holds the sum
+    of the ≤2d same-segment elements ending (starting) at it, so
+    ⌈log2 n⌉ O(n) steps suffice (Blelloch, "Prefix Sums and Their
+    Applications", CMU-CS-90-190, 1990). ``xs``/``keys`` must be bound
+    lambda variables (``_let``), not expressions."""
+    nb = "i + shiftleft(1, j)" if back else "i - shiftleft(1, j)"
+    return (
+        f"aggregate(filter(sequence(0, 30), j -> shiftleft(1, j) < size({xs})), "
+        f"{xs}, (a, j) -> transform(a, (x, i) -> x + if({nb} >= 0 AND "
+        f"{nb} < size(a) AND {keys}[{nb}] = {keys}[i], a[{nb}], 0L)))"
+    )
+
+
+# the counts leg's fold: sort the (group, pid) slices by their lowest
+# key, which orders them by group and then by range position; per slice,
+# _rs_off = the group's sum BEFORE it and _rs_gt = the group's total
+# (exclusive prefix + inclusive suffix)
+_OFFSETS_SQL = functools.reduce(
+    lambda body, bind: _let(*bind, body),
+    reversed(
+        [
+            ("l", "array_sort(ls)"),
+            ("s", "transform(l, e -> e._rs_s)"),
+            ("k", "transform(l, e -> e._rs_g)"),
+            ("fwd", _seg_scan_sql("s", "k")),
+            ("bwd", _seg_scan_sql("s", "k", back=True)),
+        ]
+    ),
+    "transform(l, (e, i) -> named_struct('_rs_pid', e._rs_pid, '_rs_lo', e._rs_lo, "
+    "'_rs_hi', e._rs_hi, '_rs_off', fwd[i] - s[i], '_rs_gt', fwd[i] - s[i] + bwd[i]))",
+)
+
+
+def _running_sum(
+    spark: SparkSession,
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str],
+    value_col: str,
+    label: str,
+) -> DataFrame:
+    """The distributed prefix sum behind the whole running-sum family:
+    per group (ONE group when ``group_cols`` is empty), the INCLUSIVE
+    running total of ``value_col`` over ``order_cols``, with no
+    single-partition global window and no per-group window shuffle —
+    ``Window.partitionBy(group)`` would funnel each group's entire data
+    into one sort task (the scale-killer shape the r08 verdict flagged
+    on ``weighted_median_by_group``). A rank is a running sum of ones
+    (``global_positions``) and an unsegmented scan is a segmented scan
+    with one segment (``global_running_sum``), so this one body serves
+    all three entry points; ``label`` names the entry point in every
+    guard error.
+
+    Shape (ONE action): range-partition on ``(group_cols, order_cols)``
+    into a lazily pinned frame (``_pid_pinned`` — the pin is a
+    correctness device), so rows of one group span a contiguous pid
+    range and each partition holds few groups. A side leg of the SAME
+    plan totals ``value_col`` per (pid, group) slice (≤ |partitions| +
+    |groups| rows); one global aggregate collects those slices plus the
+    grand total and the NULL-violation flag, and an in-plan segmented
+    scan over the sorted slice array (``_OFFSETS_SQL``) yields each
+    slice's offset and group total. The ≤|slices| offsets broadcast back
+    on (pid, group) and are added to the per-slice windowed running sum,
+    so parallelism is |partitions| regardless of |groups|, and no window
+    anywhere is unpartitioned.
+
+    The output carries every input column plus ``cum`` (the running
+    sum within the row's group), ``gtot`` (the group's total) and
+    ``_gr_all`` (the total over all groups). ``value_col`` must be
+    integral and non-null (the two prefix-sum legs must agree exactly;
+    enforced in-plan), ``order_cols`` ascending column names forming a
+    total order within each group, and group/order columns non-null (a
+    NULL group key raises at action time). A row whose key falls outside
+    its slice's counts-leg span raises (``_drift_raise``)."""
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    gokey = _guard_key_struct([*group_cols, *order_cols])
+    keyed = _pid_pinned(df, nparts, [*group_cols, *order_cols])
+    counts = keyed.groupBy("_rs_pid", *group_cols).agg(
+        F.sum(value_col).cast("long").alias("_rs_s"),
+        (F.count(F.lit(1)) != F.count(value_col)).alias("_rs_nullbad"),
+        F.min(gokey).alias("_rs_lo"),
+        F.max(gokey).alias("_rs_hi"),
+    )
+    slice_row = F.struct(
+        "_rs_lo", "_rs_hi", "_rs_pid", "_rs_s", F.struct(*group_cols).alias("_rs_g")
+    )
+    offs = counts.agg(
+        F.collect_list(slice_row).alias("ls"),
+        F.sum("_rs_s").cast("long").alias("_gr_all"),
+        F.bool_or("_rs_nullbad").alias("_rs_nullbad"),
+    ).select(F.inline(F.expr(_OFFSETS_SQL)), "_gr_all", "_rs_nullbad")
+    # a slice's group key leads its lowest range key
+    offs = offs.select("*", *[F.col("_rs_lo")[c].alias(c) for c in group_cols])
+    w = (
+        W.partitionBy("_rs_pid", *group_cols)
+        .orderBy(*order_cols)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    span_ok = (gokey >= F.col("_rs_lo")) & (gokey <= F.col("_rs_hi"))
+    # a NULL group key would miss the offsets equi-join and surface as a
+    # (misleading) drift error — name the actual contract violation first
+    null_key = functools.reduce(
+        lambda a, b: a | b, [F.col(c).isNull() for c in group_cols], F.lit(False)
+    )
+
+    def _guarded(col, what):
+        # the raise must wrap the addition, never be an operand of it:
+        # Add's null-safe codegen short-circuits `NULL + raise(...)` to
+        # NULL without evaluating the guard
+        return (
+            F.when(
+                null_key,
+                F.raise_error(
+                    F.lit(f"{label}: group column contains NULL (non-null contract)")
+                ).cast("long"),
+            )
+            .when(F.col("_rs_nullbad"), _null_value_raise(value_col, label))
+            .when(span_ok, col)
+            .otherwise(_drift_raise(f"{label} {what}", gokey))
+        )
+
+    return (
+        keyed.withColumn("_rs_win", F.sum(value_col).over(w).cast("long"))
+        .join(F.broadcast(offs), ["_rs_pid", *group_cols], "left")
+        .select(
+            *df.columns,
+            _guarded(F.col("_rs_win") + F.col("_rs_off"), "offset").alias("cum"),
+            _guarded(F.col("_rs_gt"), "total").alias("gtot"),
+            "_gr_all",
+        )
+    )
+
+
+def global_positions(spark: SparkSession, df: DataFrame, order_cols: list[str]) -> DataFrame:
+    """Total-order positions (1-based ``pos``) over ``order_cols``: the
+    distributed row number behind the epoch shuffle and exact ntile —
+    ``_running_sum`` over a constant 1 with no groups. ``order_cols``
+    must be ascending non-null column NAMES forming a total order
+    (include a tiebreak; negate numeric columns for DESC). The output
+    carries every input column plus ``pos`` and ``_gp_tot`` (the row
+    count)."""
+    ones = df.withColumn("_gp_one", F.lit(1))
+    out = _running_sum(spark, ones, [], order_cols, "_gp_one", "global_positions")
+    return out.select(
+        *df.columns, F.col("cum").alias("pos"), F.col("_gr_all").alias("_gp_tot")
+    )
+
+
 def global_running_sum(
     spark: SparkSession,
     df: DataFrame,
     order_cols: list[str],
     value_col: str,
 ) -> DataFrame:
-    """Running total of ``value_col`` over the total order ``order_cols``
-    WITHOUT a single-partition global window — ``global_positions``'s
-    sibling for weighted cumsums (token budgets, byte offsets).
-
-    Same one-action shape as ``global_positions`` (see its docstring
-    for the r15 reformulation rationale and the drift guard): the
-    counts leg totals ``value_col`` per range partition, a bounded
-    window prefix-sums the totals, and a broadcast join attaches them
-    to the per-partition INCLUSIVE cumulative-sum window. ``value_col``
-    must be integral and non-null (enforced in-plan — the prefix sums
-    must agree exactly; float addition would be order-sensitive). The
-    output carries every input column plus ``cum`` and ``_gr_tot`` (the
-    grand total as a plan column — pps step size, ABC class bounds fold
-    their integer arithmetic over it in-plan)."""
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    okey = _guard_key_struct(order_cols)
-    keyed = _pid_pinned(df, nparts, order_cols)
-    counts = keyed.groupBy("_rs_pid").agg(
-        F.sum(value_col).alias("_rs_s"),
-        F.count(F.lit(1)).alias("_rs_n"),
-        F.count(value_col).alias("_rs_nv"),
-        F.min(okey).alias("_rs_lo"),
-        F.max(okey).alias("_rs_hi"),
-    )
-    w_off = W.orderBy("_rs_pid").rowsBetween(W.unboundedPreceding, -1)
-    w_all = W.orderBy("_rs_pid").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    offs = counts.select(
-        "_rs_pid",
-        "_rs_lo",
-        "_rs_hi",
-        # ANY violating partition poisons every row (the old driver-side
-        # check was likewise global) — and the raise must wrap the
-        # addition below, never be an operand of it: Add's null-safe
-        # codegen short-circuits `NULL + raise(...)` to NULL without
-        # evaluating the guard (observed r15)
-        (
-            F.max((F.col("_rs_nv") != F.col("_rs_n")).cast("int")).over(w_all)
-            == 1
-        ).alias("_rs_nullbad"),
-        F.coalesce(F.sum("_rs_s").over(w_off), F.lit(0))
-        .cast("long")
-        .alias("_rs_off"),
-        F.sum("_rs_s").over(w_all).cast("long").alias("_gr_tot"),
-    )
-    w = (
-        W.partitionBy("_rs_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    span_ok = (okey >= F.col("_rs_lo")) & (okey <= F.col("_rs_hi"))
-    return (
-        keyed.withColumn("_rs_win", F.sum(value_col).over(w).cast("long"))
-        .join(F.broadcast(offs), "_rs_pid", "left")
-        .withColumn(
-            "cum",
-            F.when(
-                F.col("_rs_nullbad"),
-                _null_value_raise(value_col, "global_running_sum"),
-            )
-            .when(span_ok, F.col("_rs_win") + F.col("_rs_off"))
-            .otherwise(_drift_raise("global_running_sum offset", okey)),
-        )
-        .select(*df.columns, "cum", "_gr_tot")
-    )
+    """Running total ``cum`` of the integral, non-null ``value_col`` over
+    the total order ``order_cols`` (token budgets, byte offsets) —
+    ``_running_sum`` with no groups. The output carries every input
+    column plus ``cum`` and ``_gr_tot`` (the grand total)."""
+    out = _running_sum(spark, df, [], order_cols, value_col, "global_running_sum")
+    return out.select(*df.columns, "cum", F.col("_gr_all").alias("_gr_tot"))
 
 
 # grouped_running_sum group-key types: string / integer / date. The
-# original reason was literal-map key rendering (driver str() vs
-# executor cast('string')); the r15 one-action form joins on the actual
-# columns, but the restriction is KEPT — it pins the documented
-# low-cardinality-key contract (floats/booleans as group keys are a
-# design smell this primitive should refuse) and keeps the contract
-# tests stable.
+# restriction pins the documented low-cardinality-key contract
+# (floats/booleans as group keys are a design smell this primitive
+# should refuse).
 _GRS_KEY_TYPES = (
     T.StringType,
     T.LongType,
@@ -644,36 +662,11 @@ def grouped_running_sum(
     order_cols: list[str],
     value_col: str,
 ) -> DataFrame:
-    """PER-GROUP running total of ``value_col`` over ``order_cols``
-    WITHOUT a per-group window shuffle — the keyed sibling of
-    ``global_running_sum`` for LOW-cardinality group keys, where
-    ``Window.partitionBy(group)`` would funnel each group's entire data
-    into a single sort task (the scale-killer shape the r08 verdict
-    flagged on ``weighted_median_by_group``).
-
-    Shape (ONE action since r15, like the siblings): range-partition on
-    ``(group_cols, order_cols)`` — rows of one group span a contiguous
-    pid range and every partition holds at most a few groups — total
-    ``value_col`` per ``(pid, group)`` as a bounded side leg of the SAME
-    plan (≤ |partitions| + |groups| rows by contiguity), prefix-sum per
-    group over pid order with windows over that bounded leg, and
-    broadcast-join the offsets back on ``(pid, group)``. Parallelism is
-    |partitions| regardless of |groups|. The output carries three new
-    columns: ``cum`` (INCLUSIVE running sum within the row's group),
-    ``gtot`` (the group's grand total) and ``_gr_all`` (the grand total
-    over ALL groups — consumers must not re-aggregate the fact to
-    rederive either).
-
-    Constraints mirror the sibling: ``value_col`` integral and non-null
-    (the two prefix-sum legs must agree exactly; enforced in-plan),
-    ``order_cols`` ascending column names forming a total order WITHIN
-    each group, group/order columns non-null (a NULL group key misses
-    the offsets join and raises at action time). Group columns must be
-    string / integer / date typed — ENFORCED eagerly below; the
-    restriction pins the documented low-cardinality-key contract.
-    Boundary drift between the two reads of the range exchange (only
-    possible if exchange reuse failed AND resampling moved a boundary)
-    is caught per row by the span guard — see ``_drift_raise``."""
+    """PER-GROUP running total of ``value_col`` over ``order_cols`` for
+    LOW-cardinality group keys — ``_running_sum`` itself (see it for the
+    shape and the contract). Group columns must be string / integer /
+    date typed, ENFORCED eagerly here. The output carries every input
+    column plus ``cum``, ``gtot`` and ``_gr_all``."""
     for c in group_cols:
         dt = df.schema[c].dataType
         if not isinstance(dt, _GRS_KEY_TYPES):
@@ -682,94 +675,8 @@ def grouped_running_sum(
                 "only string/integer/date group keys are supported (the "
                 "documented low-cardinality-key contract)"
             )
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    gokey = _guard_key_struct([*group_cols, *order_cols])
-    keyed = _pid_pinned(df, nparts, [*group_cols, *order_cols])
-    counts = keyed.groupBy("_rs_pid", *group_cols).agg(
-        F.sum(value_col).alias("_rs_s"),
-        F.count(F.lit(1)).alias("_rs_n"),
-        F.count(value_col).alias("_rs_nv"),
-        F.min(gokey).alias("_rs_lo"),
-        F.max(gokey).alias("_rs_hi"),
-    )
-    # all three prefix/total windows run over the bounded counts leg and
-    # order by _rs_pid (the plan-lint exemption marker): per-group
-    # offsets, per-group grand totals, and the all-groups grand total
-    w_off = (
-        W.partitionBy(*group_cols)
-        .orderBy("_rs_pid")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    w_gt = (
-        W.partitionBy(*group_cols)
-        .orderBy("_rs_pid")
-        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    )
-    w_all = W.orderBy("_rs_pid").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    offs = counts.select(
-        "_rs_pid",
-        *group_cols,
-        "_rs_lo",
-        "_rs_hi",
-        # global any-violation flag; see global_running_sum for why the
-        # raise must live INSIDE the when-chain, not under an Add
-        (
-            F.max((F.col("_rs_nv") != F.col("_rs_n")).cast("int")).over(w_all)
-            == 1
-        ).alias("_rs_nullbad"),
-        F.coalesce(F.sum("_rs_s").over(w_off), F.lit(0))
-        .cast("long")
-        .alias("_rs_off"),
-        F.sum("_rs_s").over(w_gt).cast("long").alias("_rs_gt"),
-        F.sum("_rs_s").over(w_all).cast("long").alias("_gr_all"),
-    )
-    w = (
-        W.partitionBy("_rs_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    span_ok = (gokey >= F.col("_rs_lo")) & (gokey <= F.col("_rs_hi"))
-    # a NULL group key would miss the offsets equi-join and surface as a
-    # (misleading) drift error — name the actual contract violation first
-    null_key = functools.reduce(
-        lambda a, b: a | b, [F.col(c).isNull() for c in group_cols]
-    )
-
-    def _guarded(col, label):
-        return (
-            F.when(
-                null_key,
-                F.raise_error(
-                    F.lit(
-                        "grouped_running_sum: group column contains NULL "
-                        "(non-null contract)"
-                    )
-                ).cast("long"),
-            )
-            .when(
-                F.col("_rs_nullbad"),
-                _null_value_raise(value_col, "grouped_running_sum"),
-            )
-            .when(span_ok, col)
-            .otherwise(_drift_raise(label, gokey))
-        )
-
-    return (
-        keyed.withColumn("_rs_win", F.sum(value_col).over(w).cast("long"))
-        .join(F.broadcast(offs), ["_rs_pid", *group_cols], "left")
-        .withColumn(
-            "cum",
-            _guarded(
-                F.col("_rs_win") + F.col("_rs_off"),
-                "grouped_running_sum offset",
-            ),
-        )
-        .withColumn(
-            "gtot", _guarded(F.col("_rs_gt"), "grouped_running_sum total")
-        )
-        .select(*df.columns, "cum", "gtot", "_gr_all")
+    return _running_sum(
+        spark, df, group_cols, order_cols, value_col, "grouped_running_sum"
     )
 
 
@@ -784,8 +691,8 @@ def q_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one range-partitioned sort (Spark samples hash
     boundaries). Writing the sorted output per epoch IS the shuffle; a
     trainer then reads sequentially. Positions come from
-    ``global_positions`` — range partition + per-partition row_number +
-    broadcast-back offsets — so every stage stays cluster-parallel;
+    ``global_positions`` — range partition + per-partition running
+    count + broadcast-back offsets — so every stage stays cluster-parallel;
     no single-partition global window anywhere in the plan."""
     doc = read_table(spark, sf_dir, "documents")
     keyed = doc.select(
@@ -813,8 +720,8 @@ def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra rows evenly and diverges from NTILE whenever n mod k ≥ 2;
     r13 review finding — the fixtures' doc counts are all ≡ 0 mod 10,
     so only a non-multiple corpus exposed it). Positions come from
-    ``global_positions`` (range partition + per-partition row_number +
-    driver offset prefix-sum), so unlike a bare ntile window NOTHING
+    ``global_positions`` (range partition + per-partition running count
+    + broadcast-back offsets), so unlike a bare ntile window NOTHING
     funnels through one task; the grouped report after binning is
     bounded (k rows). At even larger scale the same bins can be
     approximated by percentile_approx boundaries + width_bucket, but

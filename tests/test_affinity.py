@@ -1,8 +1,10 @@
 """Semantic tests for the affinity operators: the per-nation Gini against
-a pandas model, and its decimal accumulation behind a loud guard."""
+a pandas model, its decimal accumulation behind a loud guard, and the
+job ceilings of the exact-quintile consumers."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -53,3 +55,37 @@ def test_gini_by_group_sums_in_decimal_behind_a_loud_guard(spark):
     assert "raise_error" in plan
     assert "decimal(38,0)" in plan
     assert df.count() > 0  # the guard never fires at fixture scale
+
+
+# Jobs one invocation of each quintile consumer launches (build +
+# collect, sf0.001, local[4], 4 shuffle partitions), as measured. Every
+# exact quintile of a query is scored in ONE grouped running-sum pass
+# over a stacked frame; a positions pass per quintile would repeat the
+# range shuffle, the pin and the offsets broadcast per quintile and
+# overshoot these ceilings.
+QUINTILE_JOB_CEILINGS = {"rfm_segments": 13, "segment_migration": 12}
+
+
+@pytest.mark.parametrize("name", sorted(QUINTILE_JOB_CEILINGS))
+def test_quintile_consumers_score_in_one_pass(spark, name):
+    from pb_etl_spark.registry import all_queries
+
+    fn = all_queries()[name]
+    # the first build runs the tables' schema-inference reads, which
+    # read_table keeps; those are per table, not per invocation
+    fn(spark, SF_DIR)
+    sc = spark.sparkContext
+    counts = []
+    # AQE can pick a join strategy from whichever stage finishes first,
+    # which occasionally adds a job to one run; the ceiling holds for
+    # the better of two
+    for attempt in range(2):
+        group = f"quintile-{name}-{attempt}"
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group)
+        try:
+            fn(spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert min(counts) <= QUINTILE_JOB_CEILINGS[name], f"{name}: jobs per run {counts}"

@@ -86,8 +86,8 @@ def test_read_table_bypasses_cache_without_freshness_signal(spark, monkeypatch):
 
 # one registered query per pin site
 PIN_QUERIES = [
-    "rfm_segments",  # affinity: the RFM base, plus running sums
-    "segment_migration",  # two same-plan quintiles in one invocation
+    "rfm_segments",  # affinity: the running-sum pin of its quintiles
+    "segment_migration",  # the same, over two periods' populations
     "substring_dup_spans",  # dedup: the gram frame
     "minhash_near_dup_pairs",  # dedup: the signatures
     "kmv_jaccard_sources",  # retrieval: the KMV kept set

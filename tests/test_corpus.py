@@ -154,9 +154,8 @@ def test_global_positions_is_a_total_order_without_global_window(spark):
     assert keys == sorted(keys)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan, plan
-    # the only unpartitioned window allowed is the bounded
-    # ≤|partitions|-row counts-leg prefix sum (ordered by _rs_pid);
-    # the fact-sized row_number must stay keyed on the partition id
+    # the fact-sized running count stays keyed on the partition id, and
+    # the counts leg's offsets come from an in-plan fold, not a window
     from tests.test_plan_lint import _unpartitioned_window_hit
 
     assert _unpartitioned_window_hit(plan) is None, plan
@@ -605,7 +604,7 @@ def test_grouped_running_sum_rejects_null_values(spark):
         "g string, o long, v long",
     )
     for df in (all_null, partial_null):
-        with pytest.raises(Exception, match="NULL value"):
+        with pytest.raises(Exception, match="grouped_running_sum: value column 'v' has NULL value"):
             grouped_running_sum(spark, df, ["g"], ["o"], "v").collect()
 
 
@@ -621,7 +620,7 @@ def test_global_running_sum_rejects_null_values(spark):
     df = spark.createDataFrame(
         [(1, None), (2, 3), (3, None)], "o long, v long"
     )
-    with pytest.raises(Exception, match="NULL value"):
+    with pytest.raises(Exception, match="global_running_sum: value column 'v' has NULL value"):
         global_running_sum(spark, df, ["o"], "v").collect()
 
 
@@ -640,6 +639,8 @@ def test_grouped_running_sum_guards_span_misses_loudly(spark):
     out = grouped_running_sum(spark, df, ["g"], ["o"], "v")
     plan = out._jdf.queryExecution().analyzed().toString()
     assert plan.count("raise_error") >= 2, "offset AND total lookups guarded"
+    assert "grouped_running_sum offset-span miss" in plan
+    assert "grouped_running_sum total-span miss" in plan
     got = {(r["g"], r["o"]): (r["cum"], r["gtot"]) for r in out.collect()}
     assert got == {("a", 1): (2, 5), ("a", 2): (5, 5), ("b", 1): (5, 5)}
     alls = {r["_gr_all"] for r in out.collect()}
@@ -648,10 +649,11 @@ def test_grouped_running_sum_guards_span_misses_loudly(spark):
 
 def test_global_primitives_guard_span_misses_loudly(spark):
     """global_positions and global_running_sum share grouped_running_sum's
-    failure mode — a broadcast-back offset attached to a drifted row
-    would silently corrupt pos/cum — so they carry the same raise_error
-    span guard, wired into the plan yet never firing on the healthy
-    path; the totals ride the output as plan columns."""
+    body and so its failure mode — a broadcast-back offset attached to a
+    drifted row would silently corrupt pos/cum — and its raise_error
+    span guard, wired into the plan under the entry point's own name yet
+    never firing on the healthy path; the totals ride the output as plan
+    columns."""
     from pb_etl_spark.operators.corpus import (
         global_positions,
         global_running_sum,
@@ -661,7 +663,8 @@ def test_global_primitives_guard_span_misses_loudly(spark):
         [(3, 10), (1, 20), (2, 30)], "o long, v long"
     )
     pos = global_positions(spark, df, ["o"])
-    assert "raise_error" in pos._jdf.queryExecution().analyzed().toString()
+    plan = pos._jdf.queryExecution().analyzed().toString()
+    assert "global_positions offset-span miss" in plan, plan
     rows = pos.collect()
     assert {r["_gp_tot"] for r in rows} == {3}
     assert {(r["o"], r["pos"]) for r in rows} == {
@@ -670,7 +673,8 @@ def test_global_primitives_guard_span_misses_loudly(spark):
         (3, 3),
     }
     cum = global_running_sum(spark, df, ["o"], "v")
-    assert "raise_error" in cum._jdf.queryExecution().analyzed().toString()
+    plan = cum._jdf.queryExecution().analyzed().toString()
+    assert "global_running_sum offset-span miss" in plan, plan
     crows = cum.collect()
     assert {r["_gr_tot"] for r in crows} == {60}
     assert {(r["o"], r["cum"]) for r in crows} == {

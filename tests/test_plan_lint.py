@@ -69,8 +69,8 @@ BNLJ_WHITELIST = {
     #   ≤|categories| encoder table
     "ddsketch_quantiles",  # 1-row n crossJoin + 3-probe inequality join
     #   onto the ≤|γ-buckets| cumulative sketch table
-    "rfm_segments",  # 1-row max-orderdate crossJoin + the |partitions|-
-    #   row offset maps of three global_positions calls
+    "rfm_segments",  # 1-row max-orderdate crossJoin onto the orders
+    #   before the per-customer aggregate
     "ucb_bandit_scores",  # 1-row trial-total crossJoin onto the
     #   |arms|-row score table
     "kaplan_meier",  # 1-row (N, end-day) crossJoins onto the ≤|days|
@@ -100,12 +100,11 @@ BNLJ_WHITELIST = {
 # an UNPARTITIONED window is fine ONLY when its input is bounded by
 # construction (post-aggregation frames). r15 refined the rule from the
 # old "Exchange SinglePartition + Window co-occurrence" heuristic to the
-# actual hazard — a windowspecdefinition with no partition columns and a
-# first sort column other than the running-sum primitives' internal
-# _rs_pid counts-leg marker — which removed the keyed-window false
-# positives (strict_funnel, event_pattern_match, chi2_independence,
-# rfm_segments, gini_concentration, order_cycle_time, kmv_distinct_sketch)
-# from this list and surfaced zipf_slope (real, bounded).
+# actual hazard — a windowspecdefinition with no partition columns —
+# which removed the keyed-window false positives (strict_funnel,
+# event_pattern_match, chi2_independence, rfm_segments,
+# gini_concentration, order_cycle_time, kmv_distinct_sketch) from this
+# list and surfaced zipf_slope (real, bounded).
 GLOBAL_WINDOW_WHITELIST = {
     "source_mix_report",  # cumulative share over one row per source
     "monthly_growth",  # lag over the ~monthly revenue series
@@ -172,13 +171,7 @@ _LOWCARD_RE = re.compile(
     r"windowspecdefinition\((" + "|".join(LOWCARD_WINDOW_COLS) + r")#"
 )
 
-# r15: the one-action running-sum primitives prefix-sum their bounded
-# counts leg (≤ |shuffle.partitions| + |groups| rows by construction)
-# with windows ordered by the internal _rs_pid column. Those windows are
-# the sanctioned bounded class: a lowcard-partitioned window whose spec
-# orders by _rs_pid, and an UNPARTITIONED window ordered by _rs_pid, are
-# both exempt; every other unpartitioned window still needs the
-# whitelist. The spec slice up to its frame clause is what we inspect.
+# The spec slice up to its frame clause is what we inspect.
 _WINDOWSPEC_RE = re.compile(r"windowspecdefinition\((.*?)specifiedwindowframe")
 # an unpartitioned spec starts with a SORT expression (col#id ASC/DESC);
 # a keyed spec lists bare partition columns first
@@ -186,23 +179,19 @@ _UNPART_RE = re.compile(r"^(\w+)#\d+L? (?:ASC|DESC)")
 
 
 def _lowcard_window_hit(plan: str) -> str | None:
-    for m in _LOWCARD_RE.finditer(plan):
-        spec = plan[m.start() : plan.find("specifiedwindowframe", m.start())]
-        if "_rs_pid#" in spec:
-            continue  # bounded counts-leg prefix window (see above)
-        return m.group(1)
-    return None
+    m = _LOWCARD_RE.search(plan)
+    return m.group(1) if m else None
 
 
 def _unpartitioned_window_hit(plan: str) -> str | None:
-    """First unpartitioned window NOT ordered by _rs_pid — the
-    all-rows-to-one-task hazard the old SinglePartition+Window
-    co-occurrence heuristic approximated (this form no longer false-
-    positives on keyed windows that merely share a plan with a 1-row
-    summary aggregate, but those whitelist entries are kept)."""
+    """First unpartitioned window — the all-rows-to-one-task hazard the
+    old SinglePartition+Window co-occurrence heuristic approximated (this
+    form no longer false-positives on keyed windows that merely share a
+    plan with a 1-row summary aggregate, but those whitelist entries are
+    kept)."""
     for m in _WINDOWSPEC_RE.finditer(plan):
         um = _UNPART_RE.match(m.group(1))
-        if um and um.group(1) != "_rs_pid":
+        if um:
             return um.group(1)
     return None
 
@@ -532,8 +521,8 @@ def test_no_wide_literal_map_in_any_registered_plan(spark):
             offenders[name] = max(widths)
     assert not offenders, (
         f"literal map wider than {_MAP_LITERAL_MAX} entries in a "
-        "registered plan (O(width) linear scan per row — bake a "
-        "pid-indexed array literal instead, see corpus.global_positions): "
+        "registered plan (O(width) linear scan per row — build a "
+        "keyed frame and broadcast-join it instead, see corpus._running_sum): "
         f"{offenders}"
     )
 

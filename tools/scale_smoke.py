@@ -42,7 +42,7 @@ SMOKE = [
     "rolling_active_users",
     "kmv_distinct_sketch",
     # round-4 additions: basket self-join, interaction-matrix self-join,
-    # capped per-key scan (Arrow), 3x global_positions
+    # capped per-key scan (Arrow), one 3-quintile grouped running sum
     "association_rules",
     "item_item_cosine",
     "capped_running_balance",
