@@ -44,33 +44,28 @@ from pb_etl_spark.schemas import CAT_COLS, LABEL_COL, NUM_COLS
 
 DEFAULT_SEED = 42
 PREDICTION_COL = "Y_hat"
+VAL_FRACTION = 0.2  # the reference's train_test_split(test_size=0.2)
+MAX_ITER = 50
 
 
-def build_pipeline(
-    cat_cols: list[str] | None = None,
-    num_cols: list[str] | None = None,
-    label_col: str = LABEL_COL,
-    max_iter: int = 50,
-) -> Pipeline:
+def build_pipeline() -> Pipeline:
     """Feature-encode + classify pipeline. handleInvalid='keep' gives
     unseen test-set categories their own bucket (the reference's
     vocabulary-list encoding would OOV them to zeros — same spirit)."""
-    cat_cols = CAT_COLS if cat_cols is None else cat_cols
-    num_cols = NUM_COLS if num_cols is None else num_cols
     # one multi-column indexer fits every vocabulary in one job, where an
     # indexer per column costs a fit job per column
-    idx_cols = [f"{c}__idx" for c in cat_cols]
-    oh_cols = [f"{c}__oh" for c in cat_cols]
+    idx_cols = [f"{c}__idx" for c in CAT_COLS]
+    oh_cols = [f"{c}__oh" for c in CAT_COLS]
     return Pipeline(stages=[
-        StringIndexer(inputCols=cat_cols, outputCols=idx_cols, handleInvalid="keep"),
+        StringIndexer(inputCols=CAT_COLS, outputCols=idx_cols, handleInvalid="keep"),
         OneHotEncoder(inputCols=idx_cols, outputCols=oh_cols, handleInvalid="keep"),
         VectorAssembler(
-            inputCols=num_cols + oh_cols, outputCol="features", handleInvalid="keep"
+            inputCols=NUM_COLS + oh_cols, outputCol="features", handleInvalid="keep"
         ),
         LogisticRegression(
             featuresCol="features",
-            labelCol=label_col,
-            maxIter=max_iter,
+            labelCol=LABEL_COL,
+            maxIter=MAX_ITER,
             probabilityCol="probability",
         ),
     ])
@@ -86,15 +81,11 @@ def _impute_numeric(df: DataFrame, num_cols: list[str]) -> DataFrame:
     return df.fillna(0.0, subset=present) if present else df
 
 
-def split_train_val(
-    df: DataFrame,
-    seed: int = DEFAULT_SEED,
-    val_fraction: float = 0.2,
-    num_cols: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
+def split_train_val(df: DataFrame, seed: int = DEFAULT_SEED) -> tuple[DataFrame, DataFrame]:
     """M3: impute, then the seeded train/val split train_model fits on."""
-    df = _impute_numeric(df, num_cols or NUM_COLS)
-    train, val = df.randomSplit([1.0 - val_fraction, val_fraction], seed=seed)
+    train, val = _impute_numeric(df, NUM_COLS).randomSplit(
+        [1.0 - VAL_FRACTION, VAL_FRACTION], seed=seed
+    )
     return train, val
 
 
@@ -146,25 +137,20 @@ def margin(card: dict) -> Column:
     return reduce(add, terms) + F.lit(card["intercept"])
 
 
-def _auc(card: dict, df: DataFrame, label_col: str) -> float:
-    """areaUnderROC over the scorecard's margin — the same scores as the
-    fitted model's rawPrediction[1]."""
+def auc(df: DataFrame, score_col: str, label_col: str) -> float:
+    """areaUnderROC of ``score_col`` (a margin, a probability — any score
+    monotone in the positive class) against the 0/1 ``label_col``."""
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
     ev = BinaryClassificationEvaluator(
-        rawPredictionCol="margin",
+        rawPredictionCol=score_col,
         labelCol=label_col,
         metricName="areaUnderROC",
     )
-    return float(ev.evaluate(df.select(margin(card).alias("margin"), label_col)))
+    return float(ev.evaluate(df))
 
 
-def train_model(
-    train_df: DataFrame,
-    seed: int = DEFAULT_SEED,
-    val_fraction: float = 0.2,
-    **pipeline_kwargs,
-) -> tuple[dict, dict]:
+def train_model(train_df: DataFrame, seed: int = DEFAULT_SEED) -> tuple[dict, dict]:
     """M3+M5: split, fit, and return (scorecard, metrics).
     The val split mirrors the reference's sklearn
     train_test_split(test_size=0.2) (tasks.py:290) but seeded —
@@ -172,12 +158,11 @@ def train_model(
     cached: every metric action would otherwise re-execute the full
     upstream plan (and could even observe a different split under
     nondeterministic partition order)."""
-    label_col = pipeline_kwargs.get("label_col", LABEL_COL)
-    train, val = split_train_val(train_df, seed, val_fraction, pipeline_kwargs.get("num_cols"))
+    train, val = split_train_val(train_df, seed)
     train = train.cache()
     val = val.cache()
     try:
-        model = build_pipeline(**pipeline_kwargs).fit(train)
+        model = build_pipeline().fit(train)
         # objectiveHistory is a driver-side array — safe to read off the
         # summary (no Spark job, so nothing gets serialized)
         history = model.stages[-1].summary.objectiveHistory
@@ -189,12 +174,16 @@ def train_model(
             "iterations": len(history),
             "objective_history": [float(x) for x in history],
         }
-        # the AUC jobs score the scorecard, not the fitted model: its
-        # training summary holds a sparkSession reference, which fails
-        # closure serialization once df.observe has run in the process
+        # the AUC jobs score the scorecard's margin (the fitted model's
+        # rawPrediction[1]), not the fitted model: its training summary
+        # holds a sparkSession reference, which fails closure
+        # serialization once df.observe has run in the process
+        def margin_auc(df: DataFrame) -> float:
+            return auc(df.select(margin(card).alias("margin"), LABEL_COL), "margin", LABEL_COL)
+
         try:
-            metrics["train_auc"] = _auc(card, train, label_col)
-            metrics["val_auc"] = _auc(card, val, label_col) if n_val else None
+            metrics["train_auc"] = margin_auc(train)
+            metrics["val_auc"] = margin_auc(val) if n_val else None
         except Exception as e:  # tiny fixtures can have single-class splits
             metrics.setdefault("train_auc", None)
             metrics["val_auc"] = None

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pb_etl_spark.ml.pipeline import auc
+
 N_TF_FEATURES = 1 << 12  # hashed token space; power of two like fastText
 
 
@@ -36,9 +38,9 @@ def _numeric_features(doc: DataFrame) -> DataFrame:
     the min/max token BAND), lexical diversity, stopword ratio, mean
     word length, punctuation and digit density. The diversity/stopword
     ratios use the same tokenizer as the rule chain
-    (operators.corpus._tokens) so the distillation target is learnable,
+    (operators.text._tokens) so the distillation target is learnable,
     not an artifact of tokenizer mismatch."""
-    from pb_etl_spark.operators.corpus import STOPWORDS, _tokens
+    from pb_etl_spark.operators.text import STOPWORDS, _tokens
 
     toks = _tokens()
     n_tok = F.size(toks).cast("double")
@@ -119,37 +121,6 @@ def weak_labels(doc: DataFrame) -> DataFrame:
     )
 
 
-def auc_rank(scored: DataFrame, label_col: str = "label", p_col: str = "p") -> float:
-    """ROC-AUC via the rank formulation (Mann-Whitney U):
-    AUC = (Σ avg-rank(positives) − n⁺(n⁺+1)/2) / (n⁺·n⁻), with average
-    ranks for score ties. Pure DataFrame ops — deliberately NOT
-    ``BinaryClassificationEvaluator``, whose RDD-based ``evaluate``
-    closure drags the session's ObservationManager along and dies with
-    NotSerializableException on Spark 4.1 once any streaming query has
-    run in the session. The global rank window is fine on a validation
-    slice; sample first at corpus scale."""
-    from pyspark.sql.window import Window as W
-
-    ranked = scored.select(
-        F.col(label_col).alias("y"),
-        (
-            F.rank().over(W.orderBy(p_col))
-            + (F.count(F.lit(1)).over(W.partitionBy(p_col)) - 1) / 2.0
-        ).alias("r"),
-    )
-    row = ranked.agg(
-        F.sum(F.when(F.col("y") == 1.0, F.col("r"))).alias("sum_r_pos"),
-        F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0)).alias("n_pos"),
-        F.sum(F.when(F.col("y") == 1.0, 0).otherwise(1)).alias("n_neg"),
-    ).first()
-    n_pos, n_neg = row["n_pos"], row["n_neg"]
-    if not n_pos or not n_neg:
-        return float("nan")
-    return float(
-        (row["sum_r_pos"] - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg)
-    )
-
-
 def _reload_without_summary(model, path: str):
     """Save the fitted pipeline to ``path`` — its one artifact — and load
     it back, so the returned model carries no training summary. It must
@@ -178,7 +149,7 @@ def train_quality_model(doc: DataFrame, path: str, seed: int = 42):
     scored = model.transform(val).select(
         "label", vector_to_array("probability").getItem(1).alias("p")
     )
-    return model, auc_rank(scored)
+    return model, auc(scored, "p", "label")
 
 
 def score_quality(model, doc: DataFrame) -> DataFrame:

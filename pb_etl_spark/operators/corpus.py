@@ -46,7 +46,7 @@ from pyspark.sql.window import Window as W
 from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table
 from pb_etl_spark.operators.similarity import _let
-from pb_etl_spark.operators.text import STOPWORDS
+from pb_etl_spark.operators.text import STOPWORDS, _tokens
 
 PACK_BUDGET = 512  # tokens per packed training sequence
 
@@ -62,10 +62,6 @@ TOP_P = 0.5  # nucleus share of per-language chars kept
 PAT_EMAIL = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 PAT_NUM = "[0-9]{3,}"
 PAT_TERM = "\\bcustomer\\b"
-
-
-def _tokens(col: str = "text"):
-    return F.split(F.col(col), " ")
 
 
 def q_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1004,22 +1000,21 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     where DuckDB errors; a 1-doc corpus has no negatives to sample)."""
     doc = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     n = doc.agg(F.count(F.lit(1)).alias("n_docs"))
-    negs = F.transform(
-        F.sequence(F.lit(0), F.lit(N_NEGATIVES - 1)),
-        lambda j: (
-            F.col("doc_id")
-            + 1
-            + md5_u32(
-                F.concat(F.col("doc_id").cast("string"), F.lit(":"), j.cast("string"))
-            )
-            % (F.col("n_docs") - 1)
-        )
-        % F.col("n_docs"),
-    )
+    j = F.col("j")
+    neg = (
+        F.col("doc_id")
+        + 1
+        + md5_u32(F.concat(F.col("doc_id").cast("string"), F.lit(":"), j.cast("string")))
+        % (F.col("n_docs") - 1)
+    ) % F.col("n_docs")
     return (
         doc.crossJoin(F.broadcast(n))  # 1-row corpus size
-        .select("doc_id", F.posexplode(negs).alias("j", "neg_doc_id"))
-        .select("doc_id", F.col("j").cast("long").alias("j"), "neg_doc_id")
+        .select(
+            "doc_id",
+            "n_docs",
+            F.explode(F.sequence(F.lit(0), F.lit(N_NEGATIVES - 1))).alias("j"),
+        )
+        .select("doc_id", j.cast("long").alias("j"), neg.alias("neg_doc_id"))
     )
 
 

@@ -34,6 +34,7 @@ from pb_etl_spark.catalog import read_table
 # width-independent — proven by tests/test_dedup_semantics.py's
 # 8/64/200-partition sweep.
 from pb_etl_spark.operators._width import fanout_width as _fanout_width
+from pb_etl_spark.operators.text import _tokens, ngram_rows
 
 N_HASHES = 16
 N_BANDS = 4
@@ -43,25 +44,16 @@ MINHASH_EST_THRESHOLD = 0.5
 COSINE_DUP_THRESHOLD = 0.4
 
 
-def word_shingles(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct word n-gram shingles per document — JVM-side via
-    sequence+transform (no Python), exploded to (id, shingle) rows.
-    Documents shorter than n tokens yield no shingles (sequence(0, size-n)
-    would otherwise DESCEND for size < n and crash element_at with index 0)."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k + 1) for k in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per document, (doc_id, sh) rows —
+    ``text.ngram_rows`` deduplicated per doc (documents shorter than n
+    tokens yield none)."""
     # explode multiplies rows ~|tokens|×: spread docs across cores FIRST,
     # or a compact input file runs the whole shingle pipeline as one task
     n_parts = _fanout_width(df.sparkSession)
     return (
-        df.repartition(n_parts, id_col)
-        .select(F.col(id_col).alias("doc_id"), F.explode(F.array_distinct(grams)).alias("sh"))
+        ngram_rows(df.repartition(n_parts, "doc_id"), n)
+        .select("doc_id", F.col("gram").alias("sh"))
         .distinct()
     )
 
@@ -308,7 +300,7 @@ def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = _fanout_width(spark)
     tok = (
         doc.repartition(n_parts, "doc_id")
-        .select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
+        .select("doc_id", F.explode(_tokens()).alias("tok"))
         .withColumn("h", F.md5(F.col("tok")))
     )
     sums = [
@@ -639,18 +631,16 @@ def q_fuzzy_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name"))
         .repartition(par, "id")
     )
-    # deletion-neighborhood keys via a SQL higher-order transform (runs
-    # in codegen): i=0 → substr(name,1,-1)='' ++ name = the name itself;
+    # deletion-neighborhood keys, one row per deleted position (explode +
+    # per-row built-ins stay in whole-stage codegen; a transform lambda
+    # would not): i=0 → substr(name,1,-1)='' ++ name = the name itself;
     # i>=1 → the name with character i removed
     keys = cust.select(
+        "id", "name", F.explode(F.sequence(F.lit(0), F.length("name"))).alias("i")
+    ).select(
         "id",
         "name",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, length(name)), "
-                "i -> concat(substr(name, 1, i-1), substr(name, i+1)))"
-            )
-        ).alias("bkey"),
+        F.expr("concat(substr(name, 1, i - 1), substr(name, i + 1))").alias("bkey"),
     )
     # explicit broadcast hint (guide §3.1) — GATED on a bounded-size
     # check (ADVICE r14): the keys relation is (L+1)×|customers| rows,
@@ -713,7 +703,7 @@ def q_span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     through so the DuckDB oracle (string_agg ORDER BY pos) is
     bit-identical."""
     doc = read_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = _tokens()
     n_parts = _fanout_width(spark)
     w = REWRITE_W
     chunks = (
@@ -804,8 +794,8 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     consecutive duplicated run (the span a substring-dedup pass would
     cut, in windows; +W-1 gives it in tokens).
 
-    Scale shape: windows are generated JVM-side (sequence+transform+
-    posexplode — a flatMap, no shuffle) and immediately reduced to
+    Scale shape: windows are generated in-codegen by ``ngram_rows``
+    (explode(sequence) + slice — a flatMap, no shuffle) and reduced to
     ``xxhash64(window)`` — the shuffle/join payload is 8 bytes per
     window, not the 8-token text, and the window frame is PINNED once
     for its two consumers (repeat-finding agg + profile agg) instead of
@@ -820,20 +810,10 @@ def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeat ≥ W tokens appears as a run of ≥ 1 duplicated windows).
     """
     doc = read_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - SPAN_W),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k + 1) for k in range(SPAN_W)]),
-    )
     n_parts = _fanout_width(spark)
     g = pin(
-        doc.filter(F.size(toks) >= SPAN_W)
-        .repartition(n_parts, "doc_id")
-        .select("doc_id", F.posexplode(grams).alias("pos0", "gram"))
-        .select(
-            "doc_id",
-            (F.col("pos0") + 1).alias("pos"),
-            F.xxhash64("gram").alias("gram_h"),
+        ngram_rows(doc.repartition(n_parts, "doc_id"), SPAN_W).select(
+            "doc_id", "pos", F.xxhash64("gram").alias("gram_h")
         )
     )
     dup_grams = (

@@ -758,7 +758,7 @@ def q_stream_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_VOCAB_DRIFT_ORACLE``) is the oracle here too. At 100 TB only
     per-token count deltas shuffle per micro-batch; the report always
     runs on the vocab-sized frame."""
-    from pb_etl_spark.operators.corpus import _tokens
+    from pb_etl_spark.operators.text import _tokens
     from pb_etl_spark.operators.selection import vocab_drift_from_cells
     from pb_etl_spark.streaming.windows import (
         SKETCH_STATE_PARTITIONS,

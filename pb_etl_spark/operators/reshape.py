@@ -160,8 +160,9 @@ def q_trailing_rows_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions over embeddings: transform / filter /
-    exists / aggregate lambdas run inside codegen — the no-UDF way to do
-    per-element math on array columns."""
+    exists / aggregate lambdas, evaluated JVM-side (interpreted, outside
+    whole-stage codegen) — the no-UDF way to do per-element math on
+    array columns."""
     e = read_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     return e.select(

@@ -44,6 +44,7 @@ from pyspark.sql.window import Window as W
 from pb_etl_spark.cache import pin
 from pb_etl_spark.catalog import read_table
 from pb_etl_spark.operators._width import core_count, fanout_width
+from pb_etl_spark.operators.text import _tokens, ngram_rows
 
 # BM25 free parameters (the universal defaults from Robertson & Zaragoza)
 BM25_K1 = 1.2
@@ -161,7 +162,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring for the bounded-statistic broadcast shape."""
     d = (
         read_table(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", _tokens().alias("toks"))
         .select("doc_id", "toks", F.size("toks").alias("dl"))
     )
     stats = d.agg(
@@ -202,20 +203,8 @@ def q_dup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-token sliding windows whose text also appears in ≥ 1 OTHER
     document — the span-level (substring-dedup) signal training-data
     pipelines use to find boilerplate that survives doc-level dedup."""
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .withColumn("n", F.size("toks"))
-        .filter(F.col("n") >= SPAN_W)
-    )
-    spans = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, n - {SPAN_W - 1}),"
-                f" i -> concat_ws(' ', slice(toks, i, {SPAN_W})))"
-            )
-        ).alias("span"),
+    spans = ngram_rows(read_table(spark, sf_dir, "documents"), SPAN_W).select(
+        "doc_id", F.col("gram").alias("span")
     )
     dup = (
         spans.groupBy("span")
@@ -307,7 +296,7 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch — 4 corpus scans / 9 exchanges measured by tools/plan_audit.
     # Eager, not cache.pin: pinned measured ~0.1 s slower at sf0.01
     tok = (
-        doc.select("source", F.explode(F.split("text", " ")).alias("tok"))
+        doc.select("source", F.explode(_tokens()).alias("tok"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -479,7 +468,7 @@ def q_kmv_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bare explode (md5 runs AFTER the distinct shuffle, parallel) — a
     # pre-explode repartition measured slower, see vocab_drift's note
     tok = (
-        doc.select("source", F.explode(F.split("text", " ")).alias("tok"))
+        doc.select("source", F.explode(_tokens()).alias("tok"))
         .distinct()
     )
     u = F.conv(F.substring(F.md5("tok"), 1, 13), 16, 10).cast("long")
@@ -608,7 +597,7 @@ def q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = fanout_width(spark)
     tok = pin(  # feeds sketch build AND exact counts
         doc.repartition(n_parts, "doc_id").select(
-            F.explode(F.split("text", " ")).alias("tok")
+            F.explode(_tokens()).alias("tok")
         )
     )
     js = F.array(*[F.lit(j) for j in range(CMS_D)])

@@ -67,9 +67,10 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pair verification is ONE NumPy gram matrix per cell inside
     ``applyInPandas`` — the same vectorized in-core shape as
     ``embedding_near_dup_lsh`` — instead of a centroid self-join whose
-    per-pair cosine ran as 3 codegen'd 64-element folds (measured ~10 s
-    at sf0.1 vs ~1 s for the grouped-matmul form). No candidate-pair
-    relation is ever materialized; each cell emits only its dropped ids."""
+    per-pair cosine ran as 3 interpreted 64-element lambda folds
+    (measured ~10 s at sf0.1 vs ~1 s for the grouped-matmul form). No
+    candidate-pair relation is ever materialized; each cell emits only
+    its dropped ids."""
     import numpy as np
 
     assign = assign_cells(read_table(spark, sf_dir, "embeddings"))

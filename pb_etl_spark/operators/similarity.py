@@ -270,7 +270,7 @@ def lsh_ann_topk(
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     # all table signatures in ONE Arrow-batched matrix multiply per batch
-    # (the per-plane JVM lambda-aggregate version codegen'd
+    # (the per-plane JVM lambda-aggregate version interpreted
     # n_tables×n_planes array reductions per row — ~6× slower)
     @pandas_udf("array<long>")
     def all_sigs(vecs):

@@ -3,9 +3,12 @@ quality scoring, language-ID heuristic, fingerprinting, exact dedup.
 
 Part of the training-data-pipeline surface (dedup / quality filtering /
 lang-ID are what a 100 TB corpus pipeline runs before training). Everything
-here is built-in ``pyspark.sql.functions`` — array lambdas (``F.filter``,
-``F.array_distinct``, ``F.transform``) run JVM-side inside codegen; there is
-no Python UDF in any of these paths, so throughput is the Parquet scan rate.
+here is built-in ``pyspark.sql.functions``; there is no Python UDF in any of
+these paths. Array lambdas (``F.filter``, ``F.transform``, ``F.aggregate``)
+run JVM-side but outside whole-stage codegen (Spark 4.1 evaluates them
+interpreted, per element), so row-multiplying paths — token windows above
+all — expand with ``explode(sequence(...))`` and plain built-ins per row
+instead (``ngram_rows``).
 
 Oracle parity: every expression is chosen to have an exactly-equivalent
 DuckDB formulation (same split semantics, same rounding), so these are all
@@ -36,6 +39,36 @@ def _tokens(col: str = "text"):
     (consecutive spaces yield empty tokens in both; documents are
     single-spaced)."""
     return F.split(F.col(col), " ")
+
+
+def ngram_rows(doc: DataFrame, n: int) -> DataFrame:
+    """(doc_id, pos, gram): one row per n-token window of ``text``, stride
+    1, ``pos`` 1-based — the one token-window expansion behind shingling,
+    repeated-span and repetition scoring. ``explode(sequence(...))`` then
+    ``concat_ws(slice(...))`` per row keeps the window inside whole-stage
+    codegen, where a ``transform`` lambda over the window starts would be
+    evaluated interpreted. A document with fewer than n tokens (or NULL
+    text) yields no rows: ``sequence(1, size - n + 1)`` would count DOWN
+    for size < n. Rows multiply ~|tokens|×, so callers spread documents
+    across cores first."""
+    return (
+        doc.select("doc_id", _tokens().alias("_toks"))
+        .select(
+            "doc_id",
+            "_toks",
+            F.explode(
+                F.when(
+                    F.size("_toks") >= n,
+                    F.sequence(F.lit(1), F.size("_toks") - n + 1),
+                )
+            ).alias("pos"),
+        )
+        .select(
+            "doc_id",
+            "pos",
+            F.concat_ws(" ", F.slice("_toks", F.col("pos"), F.lit(n))).alias("gram"),
+        )
+    )
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,7 +219,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     n_docs = doc.select(F.count(F.lit(1))).scalar()
     tok = doc.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
+        "doc_id", F.explode(_tokens()).alias("tok")
     )
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tok.distinct().groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -314,22 +347,13 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning. One explode + one grouped pass (count vs count-distinct)."""
     doc = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     n_parts = fanout_width(spark)
-    toks = _tokens()
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - 3),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2), F.element_at(toks, i + 3)
-        ),
-    )
     return (
-        doc.filter(F.size(toks) >= 3)
-        .repartition(n_parts, "doc_id")
-        .select("doc_id", F.explode(grams).alias("g"))
+        ngram_rows(doc.repartition(n_parts, "doc_id"), 3)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.round(
-                1 - F.count_distinct("g") / F.count(F.lit(1)), 6
+                1 - F.count_distinct("gram") / F.count(F.lit(1)), 6
             ).alias("rep_ratio"),
         )
     )
@@ -515,7 +539,7 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tok = (
         read_table(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("term"))
+        .select(F.explode(_tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("term"))

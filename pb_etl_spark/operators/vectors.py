@@ -9,7 +9,9 @@ and routed by centroid cell; the stats table drives whitening.
 
 Scale design:
 - All array math is built-in (``F.aggregate``/``F.zip_with``/``F.slice``)
-  inside codegen — no Python in any path.
+  — no Python in any path. The lambda folds run JVM-side but interpreted,
+  outside whole-stage codegen (see ``q_pq_codes`` for where that cost
+  decided the shape).
 - Per-dimension passes (``vector_quantize`` scales, ``dim_stats``) use
   ``posexplode`` → grouped agg: the explode is a flatMap (no shuffle) and
   the shuffle that follows carries (pos, partial-agg) after map-side

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -9,6 +10,19 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@contextmanager
+def job_group(spark, group: str):
+    """Run the block under the job group ``group``, which must be unused.
+    Yields a callable that returns the number of Spark jobs the group has
+    launched so far; read it after the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 @pytest.fixture(scope="session")

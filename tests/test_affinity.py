@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_group
 
 
 def test_gini_by_group_matches_pandas_model_and_bounds(spark):
@@ -74,18 +74,13 @@ def test_quintile_consumers_score_in_one_pass(spark, name):
     # the first build runs the tables' schema-inference reads, which
     # read_table keeps; those are per table, not per invocation
     fn(spark, SF_DIR)
-    sc = spark.sparkContext
     counts = []
     # AQE can pick a join strategy from whichever stage finishes first,
     # which occasionally adds a job to one run; the ceiling holds for
     # the better of two
     for attempt in range(2):
-        group = f"quintile-{name}-{attempt}"
         spark.catalog.clearCache()
-        sc.setJobGroup(group, group)
-        try:
+        with job_group(spark, f"quintile-{name}-{attempt}") as jobs:
             fn(spark, SF_DIR).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        counts.append(jobs())
     assert min(counts) <= QUINTILE_JOB_CEILINGS[name], f"{name}: jobs per run {counts}"

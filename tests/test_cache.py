@@ -10,7 +10,7 @@ from pathlib import Path
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_group
 
 
 def test_read_table_returns_cached_plan_for_unchanged_file(spark):
@@ -98,18 +98,6 @@ PIN_QUERIES = [
 ]
 
 
-def _jobs(spark, fn, group: str) -> int:
-    """Jobs launched by one invocation (build + collect) under the unused
-    job group ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn(spark, SF_DIR).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", PIN_QUERIES)
 def test_repeat_invocation_recomputes_its_pins(spark, name):
     """A repeat must not read the frames the first run pinned: both runs
@@ -127,8 +115,11 @@ def test_repeat_invocation_recomputes_its_pins(spark, name):
     pairs = []
     for attempt in range(3):
         spark.catalog.clearCache()
-        first = _jobs(spark, fn, f"pin-{name}-{attempt}-first")
-        repeat = _jobs(spark, fn, f"pin-{name}-{attempt}-repeat")
+        with job_group(spark, f"pin-{name}-{attempt}-first") as first_jobs:
+            fn(spark, SF_DIR).collect()
+        with job_group(spark, f"pin-{name}-{attempt}-repeat") as repeat_jobs:
+            fn(spark, SF_DIR).collect()
+        first, repeat = first_jobs(), repeat_jobs()
         assert first > 0
         if repeat == first:
             return

@@ -252,6 +252,43 @@ def test_word_shingles_short_docs_yield_nothing(spark):
     assert got == {(4, "a b c"), (4, "b c d")}
 
 
+# ngram_rows edge cases: fewer than n tokens, exactly 3 / 8 / 10 tokens,
+# empty text (one empty token), NULL text, doubled spaces (empty tokens)
+NGRAM_EDGE_DOCS = [
+    (1, "one two"),
+    (2, "a b c"),
+    (3, "w1 w2 w3 w4 w5 w6 w7 w8"),
+    (4, " ".join(f"t{i}" for i in range(10))),
+    (5, ""),
+    (6, None),
+    (7, "a  b   c d  e f g h i j k"),
+    (8, "x y z x y z x y z x y z"),
+]
+
+
+@pytest.mark.parametrize("n", [3, 8, 10])
+def test_ngram_rows_match_the_lambda_form(spark, n):
+    """``ngram_rows`` emits exactly the (doc_id, pos, gram) rows of the
+    per-element ``transform`` lambda form it replaced."""
+    from pb_etl_spark.operators.text import ngram_rows
+
+    docs = spark.createDataFrame(NGRAM_EDGE_DOCS, "doc_id long, text string")
+    toks = F.split("text", " ")
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k + 1) for k in range(n)]),
+    )
+    lambda_form = (
+        docs.filter(F.size(toks) >= n)
+        .select("doc_id", F.posexplode(grams).alias("pos0", "gram"))
+        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
+    )
+    got = sorted(tuple(r) for r in ngram_rows(docs, n).collect())
+    assert got == sorted(tuple(r) for r in lambda_form.collect())
+    # docs 4, 7 and 8 reach every n, so the comparison is never vacuous
+    assert {d for d, _, _ in got} >= {4, 7, 8}
+
+
 def test_connected_components_raises_on_non_convergence(spark):
     from pb_etl_spark.operators.clustering import connected_components
 

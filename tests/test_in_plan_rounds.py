@@ -9,7 +9,7 @@ import importlib
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_group
 
 CASES = [
     ("mmr_diverse_topk", "similarity", "MMR_K"),
@@ -17,19 +17,6 @@ CASES = [
     ("label_propagation_knn", "insights", "LP_ROUNDS"),
     ("bfs_hops_knn", "insights", "BFS_ROUNDS"),
 ]
-
-
-def _jobs(spark, fn, group: str) -> int:
-    """Jobs launched by one cold invocation (build + collect), counted
-    under the job group ``group``, which must be unused."""
-    sc = spark.sparkContext
-    spark.catalog.clearCache()
-    sc.setJobGroup(group, group)
-    try:
-        fn(spark, SF_DIR).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("name,module,rounds", CASES, ids=[c[0] for c in CASES])
@@ -41,10 +28,18 @@ def test_job_count_is_per_invocation_not_per_round(spark, monkeypatch, name, mod
     read_table(spark, SF_DIR, "embeddings")
     mod = importlib.import_module(f"pb_etl_spark.operators.{module}")
     fn = mod.QUERIES[name]
-    first = _jobs(spark, fn, f"{name}-first")
+
+    def jobs(group: str) -> int:
+        # one cold invocation: build + collect
+        spark.catalog.clearCache()
+        with job_group(spark, group) as n:
+            fn(spark, SF_DIR).collect()
+        return n()
+
+    first = jobs(f"{name}-first")
     assert first > 0
-    repeat = _jobs(spark, fn, f"{name}-repeat")
+    repeat = jobs(f"{name}-repeat")
     assert repeat == first, f"{name}: a repeat launched {repeat} jobs, the first {first}"
     monkeypatch.setattr(mod, rounds, 1)
-    one_round = _jobs(spark, fn, f"{name}-one-round")
+    one_round = jobs(f"{name}-one-round")
     assert one_round == first, f"{name}: {rounds}=1 launched {one_round} jobs, not {first}"

@@ -14,6 +14,7 @@ from pb_etl_spark.pipeline import METRICS_FILE, SCORECARD_FILE, build_graph, run
 from pb_etl_spark.plans.stages import Stage, StageRunner
 from pb_etl_spark.schemas import CAT_COLS, KEY_COL, NORM_COLS, NUM_COLS
 from pb_etl_spark.sources.parquet import dataset_exists, read_parquet
+from tests.conftest import job_group
 from tests.fixtures import write_fixtures
 
 
@@ -189,24 +190,18 @@ def test_fit_and_predict_job_ceilings(spark, pipeline_run, tmp_path):
     writes a JSON scorecard and predict scores it in one projection, so
     neither runs a Spark ML save or load; with a saved and reloaded
     PipelineModel they ran 57 and 19 jobs at the fixture size."""
-    sc = spark.sparkContext
     group = f"ceiling-{os.path.basename(tmp_path)}"
     terminal = build_graph(root=pipeline_run["root"], seed=42)
+    counters = {}
     for st in _stages(terminal).values():
 
         def fn(*args, _inner=st.fn, _name=st.name):
-            sc.setJobGroup(f"{group}-{_name}", _name)
-            try:
+            with job_group(spark, f"{group}-{_name}") as counters[_name]:
                 return _inner(*args)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
 
         st.fn = fn
     StageRunner(spark, str(tmp_path)).run(terminal)
-    jobs = {
-        name: len(sc.statusTracker().getJobIdsForGroup(f"{group}-{name}"))
-        for name in ("fit_model", "predict")
-    }
+    jobs = {name: counters[name]() for name in ("fit_model", "predict")}
     # fit_model: two input reads, one indexer-fit job, broadcasts and
     # split counts, one job per LR iteration (14 here; the only
     # data-dependent term) and two AUC evaluations of 3 jobs each: 34.

@@ -13,14 +13,16 @@ Rules:
   input is bounded by construction (whitelisted below) — the pattern
   that made round 2's ``deterministic_shuffle`` a one-task stage at any
   cluster size; fact-sized total orders must use
-  ``corpus.global_positions`` instead.
+  ``corpus.global_positions`` instead;
+- no ``explode``/``posexplode`` over a per-element lambda (interpreted
+  outside whole-stage codegen; explode the sequence instead).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_group
 
 # BNLJ is acceptable only when the broadcast side is O(1) rows by
 # construction — these are deliberate, documented shapes:
@@ -165,7 +167,7 @@ LOWCARD_WINDOW_WHITELIST = {
     "source_drift_matrix",  # cumulative CDF window over the bounded
     #   |sources|·|distinct values| post-aggregation grid
 }
-import re  # noqa: E402 — used only by the window rules below
+import re  # noqa: E402 — used by the window and generator rules below
 
 _LOWCARD_RE = re.compile(
     r"windowspecdefinition\((" + "|".join(LOWCARD_WINDOW_COLS) + r")#"
@@ -424,17 +426,12 @@ def _sentinel_plans(spark) -> dict[str, str]:
         # cache that the OTHER width lint silently accepts as complete,
         # never linting the unbuilt remainder (review finding)
         _warm_reads(spark)
-        sc = spark.sparkContext
         built: dict[str, str] = {}
         jobs: dict[str, int] = {}
         for name, fn in _batch_queries().items():
-            group = f"sentinel-build-{name}"
-            sc.setJobGroup(group, group)
-            try:
+            with job_group(spark, f"sentinel-build-{name}") as n_jobs:
                 df = fn(spark, SF_DIR)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            jobs[name] = n_jobs()
             built[name] = df._jdf.queryExecution().executedPlan().toString()
         _sentinel_plans_cache.update(built)
         _sentinel_build_jobs.update(jobs)
@@ -492,6 +489,52 @@ def test_build_jobs_whitelist_is_not_stale(spark):
                 f"{name} no longer launches a job while built — remove it "
                 "from BUILD_JOBS_WHITELIST"
             )
+
+
+# A generator over a higher-order function's array (``explode(transform(
+# sequence(...), i -> ...))``) evaluates every element's lambda outside
+# whole-stage codegen (Spark 4.1's ArrayTransform, ZipWith, ArrayFilter
+# and ArrayAggregate are CodegenFallback). Row expansions explode the
+# sequence itself and compute each element with built-ins on the
+# exploded row instead (``text.ngram_rows``); no registered query needs
+# an exemption.
+_GENERATOR_RE = re.compile(r"Generate (?:pos)?explode(?:_outer)?\(")
+
+
+def _lambda_explode_hit(plan: str) -> str | None:
+    """The first explode/posexplode whose generator argument holds a
+    lambda, as a snippet; None if there is none."""
+    for m in _GENERATOR_RE.finditer(plan):
+        depth, i = 1, m.end()
+        while i < len(plan) and depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        if "lambdafunction" in plan[m.end() : i - 1]:
+            return plan[m.start() : min(i, m.start() + 120)]
+    return None
+
+
+def test_no_explode_over_a_lambda_in_any_registered_plan(spark):
+    offenders = {
+        name: hit
+        for name, plan in _sentinel_plans(spark).items()
+        if (hit := _lambda_explode_hit(plan))
+    }
+    assert not offenders, (
+        "explode over a per-element lambda (explode the sequence and use "
+        f"built-ins per row, see text.ngram_rows): {offenders}"
+    )
+
+
+def test_lambda_explode_extractor():
+    plan = (
+        "Generate explode(transform(sequence(0, n#1), lambdafunction(concat("
+        "x#2, lambda i#3), lambda i#3, false))), [id#0], false, [k#4]\n"
+        "Generate explode(sequence(1, n#1)), [id#0], false, [pos#5]\n"
+        "Project [transform(a#6, lambdafunction(x#7, lambda x#7, false))]"
+    )
+    assert _lambda_explode_hit(plan).startswith("Generate explode(transform(")
+    assert _lambda_explode_hit(plan.split("\n", 1)[1]) is None
 
 
 # No registered plan may probe a literal map wider than this: GetMapValue

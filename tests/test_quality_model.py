@@ -68,3 +68,23 @@ def test_save_load_round_trip(spark, docs, fitted, tmp_path):
     a = score_quality(model, docs).toPandas().set_index("doc_id").sort_index()
     b = score_quality(reloaded, docs).toPandas().set_index("doc_id").sort_index()
     assert (a["p_quality"] - b["p_quality"]).abs().max() < 1e-9
+
+
+def test_trains_after_an_observed_write_and_a_stream(spark, docs, tmp_path):
+    """The held-out AUC runs Spark ML's BinaryClassificationEvaluator; it
+    keeps working in a session where ``df.observe`` has written and a
+    memory-sink stream has run and stopped."""
+    from pyspark.sql import Observation
+
+    from pb_etl_spark.ml.quality_model import train_quality_model
+    from pb_etl_spark.streaming.windows import run_to_memory
+
+    obs = Observation("rows_written")
+    ids = docs.select("doc_id").limit(5)
+    ids.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(str(tmp_path / "ids"))
+    assert obs.get["n"] == 5
+    stream = spark.readStream.schema(ids.schema).parquet(str(tmp_path / "ids"))
+    assert run_to_memory(stream, "quality_model_ids", "append").count() == 5
+    assert not spark.streams.active
+    _, auc = train_quality_model(docs, str(tmp_path / "model"), seed=42)
+    assert auc > 0.85, f"held-out AUC {auc}"
