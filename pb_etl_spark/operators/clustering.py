@@ -18,10 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from pb_etl_spark.catalog import read_table
 from pb_etl_spark.operators.dedup import q_minhash_near_dup_pairs
 from pb_etl_spark.operators.insights import LP_TAU, _threshold_graph_pass
+from pb_etl_spark.operators.similarity import _let
 from pb_etl_spark.session import stats_reset_checkpoint
 
 MAX_ROUNDS = 64  # hook+jump needs roughly O(log diameter) rounds with a
@@ -147,12 +149,73 @@ def q_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Members-per-blocking-key bound for the partition-local union-find
-# path. One Arrow batch holds a whole key's members + edges in a single
-# executor, so the bound is an executor-memory guard: 2M members ≈ tens
-# of MB per batch. Keys above it fall back to the distributed
-# pointer-jumping connected_components on just their edge subset.
-ER_UF_MAX_MEMBERS = 2_000_000
+# Members-per-nation bound for the in-row ``nation_components`` path,
+# which holds a nation's whole row (sorted members, neighbour
+# positions, label arrays) in one task. Its cost is one window and two
+# aggregates over members + 2·edges rows, then rounds × (members +
+# 2·edges) × ~0.3 µs on one core. Both paths run the same rounds (31 at
+# most on the ×4 fixture), so rounds cancel when comparing them.
+# Measured at local[4] on a random tree with 2 directed edges per
+# member, 17-18 rounds: in-row 18.6 s against 79.9 s distributed at 1M
+# members, 7.9 s against 35.0 s at 300k. The bound is the largest size
+# measured; its row is about 100 MB.
+ER_UF_MAX_MEMBERS = 1_000_000
+
+
+def nation_components(members: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Connected components inside each nation, in-plan: ``members``
+    (nat, id) and undirected ``pairs`` (nat, ia, ib) between members →
+    (c_custkey, entity_id), the component's minimum id.
+
+    Each nation becomes ONE row ``g``: its members sorted by id, each
+    with its neighbours' POSITIONS in ``g``. A fold then runs rounds of
+    min-label hooking (take the least label over self and neighbours)
+    plus one pointer jump (label ← label's label). Labels are positions,
+    so the least is the minimum id. They never exceed plain min-label
+    propagation's, which converges in < |members| rounds, and a
+    converged flag makes later rounds no-ops. The hooking + jumping
+    scheme is Rastogi et al. (ICDE 2013), "Finding Connected Components
+    in Map-Reduce in Logarithmic Rounds", run inside one row."""
+    # both directions from ONE read of the pairs (a union would plan the
+    # matcher twice), plus a self-loop per member so that every member
+    # gets a row and a position; its own label is harmless to the min
+    ends = pairs.select(
+        "nat",
+        F.inline(
+            F.array(
+                F.struct(F.col("ia").alias("id"), F.col("ib").alias("y")),
+                F.struct(F.col("ib").alias("id"), F.col("ia").alias("y")),
+            )
+        ),
+    ).unionByName(members.select("nat", "id", F.col("id").alias("y")))
+    # the window's exchange on nat also serves both aggregates: one shuffle
+    rows = (
+        ends.withColumn("q", F.dense_rank().over(W.partitionBy("nat").orderBy("y")) - 1)
+        .groupBy("nat", "id")
+        .agg(F.collect_list("q").alias("nb"))
+        .groupBy("nat")
+        .agg(F.array_sort(F.collect_list(F.struct("id", "nb"))).alias("g"))
+    )
+    step = _let(
+        "h",
+        "transform(g, x -> array_min(transform(x.nb, q -> s.l[q])))",
+        _let("j", "transform(h, v -> h[v])", "named_struct('l', j, 'done', j = s.l)"),
+    )
+    # ArrayAggregate copies its state every iteration, so one flat fold
+    # of |members| rounds copies the labels |members| times even after
+    # the fixpoint (50 s for a 100k-member nation done in 17 rounds).
+    # Four nested folds of k = ⌈|members|^¼⌉ + 1 rounds each hold more
+    # than |members| rounds, and a done state skips whole inner folds:
+    # at most rounds + 4k copies.
+    k = "sequence(1, int(ceil(pow(size(g), 0.25))) + 1)"
+    for _ in range(3):
+        step = f"aggregate({k}, s, (s, _) -> IF(s.done, s, {step}))"
+    fold = (
+        f"aggregate({k}, named_struct('l', sequence(0, size(g) - 1), 'done', false), "
+        f"(s, _) -> IF(s.done, s, {step}), "
+        "s -> transform(g, (x, i) -> named_struct('c_custkey', x.id, 'entity_id', g[s.l[i]].id)))"
+    )
+    return rows.select(F.inline(F.expr(fold)))
 
 
 def _parquet_rows_at_most(path: str, bound: int) -> bool:
@@ -207,132 +270,53 @@ def q_entity_resolution(
     uf_max_members: int = ER_UF_MAX_MEMBERS,
     big_nats: list[int] | None = None,
 ) -> DataFrame:
-    """End-to-end entity resolution: fuzzy name matching (deletion-
-    neighborhood blocked edit-distance-1 pairs, dedup.py) feeds
-    per-nation clustering, producing one canonical entity id (the
-    component-minimum custkey) per customer — the full
-    block → match → cluster pipeline of a record-linkage system.
-    Singletons resolve to themselves.
+    """End-to-end entity resolution: fuzzy name matching feeds per-nation
+    clustering, producing one canonical entity id (the component-minimum
+    custkey) per customer — the block → match → cluster pipeline of a
+    record-linkage system. Singletons resolve to themselves.
 
-    Matching is ATTRIBUTE-CONSTRAINED (same nation) on top of the name
-    similarity: pure edit-distance-1 transitive closure collapses the
-    sequentially-numbered fixture names into ONE giant component (the
-    classic chain-collapse failure of unconstrained closure ER); the
-    blocking attribute is what production matchers use to break those
-    chains — and it also BOUNDS every component inside one nation.
+    Matching is ``edit1_pairs`` BLOCKED BY NATION, so cross-nation
+    candidates never form. Unconstrained edit-distance-1 closure would
+    chain-collapse the sequentially-numbered fixture names into ONE
+    component; the blocking attribute breaks those chains and bounds
+    every component inside one nation.
 
-    Clustering is a SIZE-THRESHOLDED HYBRID. Nations whose member count
-    is ≤ ``uf_max_members`` run partition-local UNION-FIND on the
-    cogrouped members + edges (custom-operator rule (b): one Arrow
-    batch per nation, one shuffle — linear, and the right call for the
-    fixture's long same-nation name chains, whose diameter in the
-    hundreds makes label propagation need tens of rounds). Nations
-    ABOVE the bound would put an entire nation's members in one
-    executor's memory and cap the stage at |big nations| tasks, so they
-    fall back to the distributed pointer-jumping
-    ``connected_components`` restricted to their edge subset (edges
-    never cross nations, so the union of the two paths is exact). Both
-    paths label a component by its minimum custkey, so the result is
-    path-independent — the same rows and hashes come out whatever the
-    threshold.
-
-    The split decision is CONSTRUCTION-CHEAP: when the customer table's
-    parquet footers prove total rows ≤ the bound (the common case — no
-    nation can exceed it), ``big_nats`` is decided from metadata alone
-    and building this query runs NO Spark job. Only when the footer
-    total exceeds the bound (or footers are unreadable) does a bounded
-    per-nation count run (≤ |nations| rows collected) — negligible next
-    to the ER job it precedes. Callers that already know the big keys
-    can pass ``big_nats`` explicitly and skip both.
+    Clustering is SIZE-THRESHOLDED. Nations with ≤ ``uf_max_members``
+    members run ``nation_components`` (one in-plan row each, no Python
+    worker, no per-round job); larger ones fall back to the distributed
+    ``connected_components`` on their edge subset. Both label by the
+    minimum custkey, so the result does not depend on the threshold.
+    When the customer footers prove total rows ≤ the bound, the split is
+    decided from metadata and building this query runs NO Spark job;
+    otherwise a per-nation count runs. Callers can pass ``big_nats``.
 
     Oracle: the quadratic levenshtein pair join + a recursive CTE — the
     Spark side's blocking AND its clustering are both proven against
     brute force."""
-    import pandas as pd
+    from pb_etl_spark.operators.dedup import edit1_pairs
 
-    from pb_etl_spark.operators.dedup import q_fuzzy_match_pairs
-
-    cust = read_table(spark, sf_dir, "customer")
-    members = cust.select(
+    members = read_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nat"), F.col("c_custkey").alias("id")
     )
-    pairs = (
-        q_fuzzy_match_pairs(spark, sf_dir)
-        .join(
-            F.broadcast(members.select(F.col("id").alias("ia"), F.col("nat").alias("nat_a"))),
-            "ia",
-        )
-        .join(
-            F.broadcast(members.select(F.col("id").alias("ib"), F.col("nat").alias("nat_b"))),
-            "ib",
-        )
-        .filter(F.col("nat_a") == F.col("nat_b"))
-        .select(F.col("nat_a").alias("nat"), "ia", "ib")
+    pairs = edit1_pairs(spark, sf_dir, ["c_nationkey"]).select(
+        F.col("c_nationkey").alias("nat"), "ia", "ib"
     )
 
     if big_nats is None:
-        # footer-metadata fast path: total customer rows ≤ bound ⇒ no
-        # nation can exceed it ⇒ no Spark job at construction time
         cust_path = f"{sf_dir.rstrip('/')}/customer.parquet"
         if _parquet_rows_at_most(cust_path, uf_max_members):
             big_nats = []
         else:
-            # bounded driver-side split decision: one row per nation
-            # (≤ 25 here; |distinct blocking keys| in general — a
-            # dimension, not a fact)
-            counts = (
-                members.groupBy("nat").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            big_nats = sorted(r["nat"] for r in counts if r["n"] > uf_max_members)
-    else:
-        big_nats = sorted(big_nats)
-
-    def resolve(key, mem: pd.DataFrame, edg: pd.DataFrame) -> pd.DataFrame:
-        ids = mem["id"].to_numpy()
-        parent = {int(i): int(i) for i in ids}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(edg["ia"].to_numpy(), edg["ib"].to_numpy()):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                # union by MIN id so the root IS the canonical entity id
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        return pd.DataFrame(
-            {
-                "c_custkey": ids,
-                "entity_id": [find(int(i)) for i in ids],
-            }
-        )
-
-    small = members if not big_nats else members.filter(~F.col("nat").isin(big_nats))
-    small_pairs = pairs if not big_nats else pairs.filter(~F.col("nat").isin(big_nats))
-    uf_part = (
-        small.groupBy("nat")
-        .cogroup(small_pairs.groupBy("nat"))
-        .applyInPandas(resolve, schema="c_custkey long, entity_id long")
-    )
+            counts = members.groupBy("nat").count().collect()
+            big_nats = [r["nat"] for r in counts if r["count"] > uf_max_members]
     if not big_nats:
-        # default path: threshold never trips on fixture-scale data, so
-        # the plan (and its hash) is identical to the pure-UF version
-        return uf_part
-
-    # distributed fallback: pointer-jumping CC over ONLY the big
-    # nations' vertex/edge subsets. Components are nation-bounded, so
-    # running all big nations in one CC call is exact and keeps the
-    # iteration count at max over nations, not sum.
+        return nation_components(members, pairs)
+    big = F.col("nat").isin(sorted(big_nats))
     cc_part = connected_components(
-        members.filter(F.col("nat").isin(big_nats)).select("id"),
-        pairs.filter(F.col("nat").isin(big_nats)).select(
-            F.col("ia").alias("src"), F.col("ib").alias("dst")
-        ),
+        members.filter(big).select("id"),
+        pairs.filter(big).select(F.col("ia").alias("src"), F.col("ib").alias("dst")),
     ).select(F.col("id").alias("c_custkey"), F.col("cluster_id").alias("entity_id"))
-    return uf_part.unionAll(cc_part)
+    return nation_components(members.filter(~big), pairs.filter(~big)).unionAll(cc_part)
 
 
 def q_entity_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:

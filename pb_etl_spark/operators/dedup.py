@@ -601,55 +601,60 @@ def q_embedding_near_dup_lsh_lowt(spark: SparkSession, sf_dir: str) -> DataFrame
 FUZZY_BROADCAST_MAX_CUSTOMERS = 200_000
 
 
-def q_fuzzy_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy entity matching at scale: customer-name pairs within edit
-    distance 1, via DELETION-NEIGHBORHOOD blocking (FastSS, radius 1) —
-    each name emits L+1 keys: itself (i=0) and every single-character
-    deletion (i=1..L). Any pair at edit distance ≤ 1 collides on at
-    least one key: identical names on the identity key, a substitution
-    at position i on both sides' deletion-at-i keys, and an
-    insert/delete pair because the longer name's deletion key at the
-    inserted position IS the shorter name — so the blocking is COMPLETE
-    for true levenshtein ≤ 1 even on variable-length names (earlier
-    versions used substitution-only wildcard keys, which silently miss
-    unequal-length pairs). The levenshtein verify on collisions is
-    exact. The join is an equi-join on the deletion key (shuffle =
-    (L+1) × names, linear), never a name × name cross product — the
-    classic candidates-then-verify trade: (L+1)× data expansion for
-    O(n²)→O(n·L) work."""
-    # Repartition the NARROW (id, name) rows BEFORE the key explode —
-    # the scan is one file = one task, and with the rebalance placed
-    # after the explode, the whole deletion-neighborhood build ran
-    # single-task TWICE (probe-side exchange map + broadcast build),
-    # 0.63 s + 0.24 s of the query's 1.8 s at sf0.1 (r14 profile). Both
-    # join legs now derive from the same repartitioned frame, so the
-    # explode runs wide and the exchange ships 2 short strings per
-    # customer instead of L+1 keys.
-    par = _fanout_width(spark)
+def edit1_pairs(
+    spark: SparkSession, sf_dir: str, block_cols: list[str]
+) -> DataFrame:
+    """Customer-name pairs within edit distance 1, as (*block_cols, ia,
+    ib, dist) with ia < ib: DELETION-NEIGHBORHOOD blocking (FastSS,
+    radius 1; Bocek, Hunt & Stiller 2007) with no verify step. Each name
+    emits L+1 keys (bkey, i): the name itself at i = 0 and the name with
+    character i removed at i = 1..L. The self-join is an equi-join on
+    bkey plus ``block_cols`` (customer columns that must also agree),
+    and its residual makes a key collision exactly an edit-distance ≤ 1
+    pair:
+
+    - ``a.i = b.i``: equal lengths; deleting the SAME position from both
+      gives the same string iff they differ at most at that position
+      (i = 0 on both: identical names, distance 0);
+    - ``a.i = 0 OR b.i = 0``: lengths n and n+1; a deletion from the
+      longer name equals the whole shorter name iff it is one insertion.
+
+    Other collisions (different positions deleted from equal-length
+    names, e.g. "ab"/"ba") are distance 2 and fail the residual, so
+    ``dist`` is just whether the names differ. A NULL name explodes no
+    keys and matches nothing. The join is linear in (L+1) × names; the
+    pairs are distinct on (ia, ib) because a pair can collide on several
+    keys."""
+    # Repartition the NARROW (id, name) rows BEFORE the key explode: the
+    # scan is one file = one task, and both join legs derive from this
+    # frame, so the explode runs wide and the exchange ships 2 short
+    # strings per customer instead of L+1 keys.
     cust = (
         read_table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name"))
-        .repartition(par, "id")
+        .select(
+            *block_cols, F.col("c_custkey").alias("id"), F.col("c_name").alias("name")
+        )
+        .repartition(_fanout_width(spark), "id")
     )
-    # deletion-neighborhood keys, one row per deleted position (explode +
-    # per-row built-ins stay in whole-stage codegen; a transform lambda
-    # would not): i=0 → substr(name,1,-1)='' ++ name = the name itself;
-    # i>=1 → the name with character i removed
+    # explode + per-row built-ins stay in whole-stage codegen; i = 0 →
+    # substr(name, 1, -1) = '' ++ name = the name itself. The coalesce
+    # keeps the join from inferring an isnotnull(bkey) filter that would
+    # compute the concat twice; a NULL name explodes no rows anyway.
     keys = cust.select(
-        "id", "name", F.explode(F.sequence(F.lit(0), F.length("name"))).alias("i")
-    ).select(
+        *block_cols,
         "id",
         "name",
-        F.expr("concat(substr(name, 1, i - 1), substr(name, i + 1))").alias("bkey"),
+        F.explode(F.sequence(F.lit(0), F.length("name"))).alias("i"),
+    ).withColumn(
+        "bkey",
+        F.expr("coalesce(concat(substr(name, 1, i - 1), substr(name, i + 1)), '')"),
     )
-    # explicit broadcast hint (guide §3.1) — GATED on a bounded-size
-    # check (ADVICE r14): the keys relation is (L+1)×|customers| rows,
-    # linear in data volume, and an unconditional hint removes Spark's
-    # size-based fallback, turning the graceful sort-merge flip at real
-    # scale into an executor/driver OOM. Under the ceiling the hint
-    # stays (post-explode size ESTIMATES are unreliable and must not
-    # flip this to a sort-merge join on some session); above it — or
-    # when footers are unreadable — the planner decides.
+    # explicit broadcast hint, GATED on a bounded-size check: the keys
+    # relation is (L+1)×|customers| rows, so an unconditional hint would
+    # turn the planner's size-based sort-merge fallback at real scale
+    # into an OOM. Under the ceiling the hint stays (post-explode size
+    # estimates are unreliable); above it, or when footers are
+    # unreadable, the planner decides.
     from pb_etl_spark.operators.clustering import _parquet_rows_at_most
 
     cust_path = f"{sf_dir.rstrip('/')}/customer.parquet"
@@ -658,28 +663,26 @@ def q_fuzzy_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = F.broadcast(keys).alias("b")
     else:
         b = keys.alias("b")
-    # order matters: levenshtein + filter run MAP-SIDE before the
-    # distinct, so only matching pairs enter the dedup shuffle —
-    # measured faster than deduping candidates first even though
-    # multi-key collisions re-verify a few pairs
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in ["bkey", *block_cols]]
+    residual = F.expr("a.id < b.id AND (a.i = b.i OR a.i = 0 OR b.i = 0)")
     return (
-        a.join(b, (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.id") < F.col("b.id")))
+        a.join(b, [*on, residual])
         .select(
+            *[F.col(f"a.{c}").alias(c) for c in block_cols],
             F.col("a.id").alias("ia"),
             F.col("b.id").alias("ib"),
-            # THRESHOLDED levenshtein (r15): the 3-arg form early-
-            # terminates as soon as the running distance exceeds 1 —
-            # O(threshold·len) per pair instead of the full O(len²)
-            # matrix — and returns -1 above it, so dist >= 0 is exactly
-            # the old dist <= 1 (kept rows still carry the true 0/1
-            # distance; emitted values identical, oracle-pinned)
-            F.levenshtein(F.col("a.name"), F.col("b.name"), 1)
-            .cast("long")
-            .alias("dist"),
+            (F.col("a.name") != F.col("b.name")).cast("long").alias("dist"),
         )
-        .filter(F.col("dist") >= 0)
         .dropDuplicates(["ia", "ib"])
     )
+
+
+def q_fuzzy_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fuzzy entity matching at scale: all customer-name pairs within
+    edit distance 1, (ia, ib, dist) — ``edit1_pairs`` with no blocking
+    attribute. Equi-join candidates, never a name × name cross product:
+    (L+1)× key expansion for O(n²) → O(n·L) work."""
+    return edit1_pairs(spark, sf_dir, [])
 
 
 REWRITE_W = 8  # tokens per non-overlapping span for the rewrite pass

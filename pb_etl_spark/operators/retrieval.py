@@ -203,9 +203,12 @@ def q_dup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-token sliding windows whose text also appears in ≥ 1 OTHER
     document — the span-level (substring-dedup) signal training-data
     pipelines use to find boilerplate that survives doc-level dedup."""
-    spans = ngram_rows(read_table(spark, sf_dir, "documents"), SPAN_W).select(
-        "doc_id", F.col("gram").alias("span")
+    # spread docs across cores before the window explode, or the compact
+    # documents file runs it in the scan's single task
+    docs = read_table(spark, sf_dir, "documents").repartition(
+        fanout_width(spark), "doc_id"
     )
+    spans = ngram_rows(docs, SPAN_W).select("doc_id", F.col("gram").alias("span"))
     dup = (
         spans.groupBy("span")
         .agg(F.count_distinct("doc_id").alias("nd"))

@@ -137,10 +137,11 @@ def test_entity_resolution_clusters_are_consistent(spark):
 
 def test_entity_resolution_cc_fallback_matches_union_find(spark):
     """The size-thresholded hybrid (clustering.py): forcing EVERY nation
-    over the union-find bound (uf_max_members=0) must route all of them
+    over the in-row bound (uf_max_members=0) must route all of them
     through the distributed pointer-jumping connected_components path
-    and produce byte-identical entities to the default all-union-find
-    path — the two clustering algorithms are interchangeable."""
+    and produce byte-identical entities to the default path, where every
+    nation runs the in-plan ``nation_components`` fold — the two
+    clustering paths are interchangeable."""
     from pb_etl_spark.operators.clustering import q_entity_resolution
 
     base = (
@@ -156,7 +157,7 @@ def test_entity_resolution_cc_fallback_matches_union_find(spark):
         .reset_index(drop=True)
     )
     assert base.equals(forced)
-    # and a MIXED split (some nations UF, some CC): thresholding at the
+    # and a MIXED split (some nations in-row, some CC): thresholding at the
     # median nation size exercises the union of both paths in one plan
     from pb_etl_spark.catalog import read_table
 
@@ -185,10 +186,10 @@ SCALE_DIR = __file__.rsplit("/tests/", 1)[0] + "/.scale/sf0.4"
     reason="x4 scaled fixture not generated (tools/make_scaled_fixture.py 4)",
 )
 def test_entity_resolution_hybrid_both_paths_at_scale(spark):
-    """r04 verdict directive #5: run the size-thresholded hybrid on the
-    ×4 scaled fixture with a MID bound so BOTH the partition-local
-    union-find path and the distributed CC path execute on real data in
-    the same invocation — and match the all-union-find answer exactly."""
+    """Run the size-thresholded hybrid on the ×4 scaled fixture with a
+    MID bound so BOTH the in-row ``nation_components`` path and the
+    distributed CC path execute on real data in the same invocation —
+    and match the all-in-row answer exactly."""
     from pb_etl_spark.catalog import read_table
     from pb_etl_spark.operators.clustering import q_entity_resolution
 

@@ -426,6 +426,68 @@ def test_fuzzy_broadcast_hint_is_size_gated(spark, monkeypatch):
     assert n_gated == q_fuzzy_match_pairs(spark, SF_DIR).count()
 
 
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+@pytest.mark.parametrize("block_cols", [[], ["c_nationkey"]])
+def test_edit1_pairs_matches_brute_force_levenshtein(spark, tmp_path, block_cols):
+    """The verify-free FastSS matcher against brute-force Levenshtein on
+    the names no fixture has: unequal lengths (the insert/delete branch,
+    ``a.i = 0 OR b.i = 0``), duplicates (distance 0), transpositions
+    (distance 2, which collide on a deletion key but must not match),
+    empty, NULL and multibyte names (code points, not bytes)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pb_etl_spark.operators.dedup import edit1_pairs
+
+    rng = random.Random(7)
+    names = [
+        "", "", "a", "b", "ab", "ba", "abc", "abc", "abd", "acb", "abcd",
+        "bcd", "Customer#000000001", "Customer#000000011",
+        "Customer#00000001", "café", "cafe", "cafés", "caf", "é", "ée",
+        "日本", "日本語", "本語", "日", "日日", "𝄞a", "a𝄞", "𝄞", None,
+    ]
+    names += [
+        "".join(rng.choice("abé日") for _ in range(rng.randint(0, 4)))
+        for _ in range(50)
+    ]
+    ids = rng.sample(range(10, 100_000), len(names))
+    nats = [rng.randint(0, 2) for _ in names]
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array(ids, pa.int64()),
+                "c_name": pa.array(names, pa.string()),
+                "c_nationkey": pa.array(nats, pa.int32()),
+            }
+        ),
+        str(tmp_path / "customer.parquet"),
+    )
+    rows = sorted(zip(ids, names, nats))
+    want = sorted(
+        (ia, ib, d)
+        for k, (ia, na, ta) in enumerate(rows)
+        for ib, nb, tb in rows[k + 1 :]
+        if na is not None and nb is not None
+        and (not block_cols or ta == tb)
+        and (d := _levenshtein(na, nb)) <= 1
+    )
+    got = sorted(
+        (r["ia"], r["ib"], r["dist"])
+        for r in edit1_pairs(spark, str(tmp_path), block_cols).collect()
+    )
+    assert {d for _, _, d in want} == {0, 1}
+    assert got == want
+
+
 def test_minhash_expr_scaffold_is_expression_identical(spark):
     """The one-parse F.expr minhash aggregates must analyze to the SAME
     expressions as the r01-r14 Column builders (the _dot dual-mode

@@ -113,8 +113,12 @@ def test_connected_components_matches_union_find(spark, edges):
     else:
         edf = spark.createDataFrame([], "src long, dst long")
     got = {r["id"]: r["cluster_id"] for r in connected_components(verts, edf).collect()}
+    assert got == _min_label_union_find(range(15), edges)
 
-    parent = list(range(15))
+
+def _min_label_union_find(ids, edges) -> dict[int, int]:
+    """Each id's component minimum: union by the smaller root."""
+    parent = {i: i for i in ids}
 
     def find(x: int) -> int:
         while parent[x] != x:
@@ -126,12 +130,73 @@ def test_connected_components_matches_union_find(spark, edges):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    # normalize: label = min member of the component
-    comp: dict[int, list[int]] = {}
-    for i in range(15):
-        comp.setdefault(find(i), []).append(i)
-    want = {i: min(members) for root, members in comp.items() for i in members}
-    assert got == want
+    return {i: find(i) for i in ids}
+
+
+def _nation_components(spark, members, edges) -> dict[int, int]:
+    from pb_etl_spark.operators.clustering import nation_components
+
+    got = nation_components(
+        spark.createDataFrame(members, "nat int, id long"),
+        spark.createDataFrame(edges, "nat int, ia long, ib long"),
+    ).collect()
+    assert len(got) == len(members)
+    return {r["c_custkey"]: r["entity_id"] for r in got}
+
+
+@st.composite
+def _blocked_graphs(draw):
+    """Members in up to 3 nations with sparse, non-contiguous ids, and
+    same-nation edges drawn as member-index pairs: duplicates, both
+    orientations and self-loops allowed; many members stay isolated."""
+    ids = draw(st.lists(st.integers(0, 10**6), min_size=1, max_size=30, unique=True))
+    nats = draw(st.lists(st.integers(0, 2), min_size=len(ids), max_size=len(ids)))
+    idx = st.integers(0, len(ids) - 1)
+    raw = draw(st.lists(st.tuples(idx, idx), max_size=40))
+    edges = [(nats[a], ids[a], ids[b]) for a, b in raw if nats[a] == nats[b]]
+    return list(zip(nats, ids)), edges
+
+
+@given(graph=_blocked_graphs())
+@settings(**SETTINGS)
+def test_nation_components_matches_union_find(spark, graph):
+    members, edges = graph
+    want = _min_label_union_find([i for _, i in members], [(a, b) for _, a, b in edges])
+    assert _nation_components(spark, members, edges) == want
+
+
+def test_nation_components_long_shuffled_path(spark):
+    """A 300-member path whose ids are shuffled along it: the label of the
+    minimum id must travel the whole path, which takes many rounds of
+    hooking + jumping. A second nation's path and isolated members ride
+    along in the same plan."""
+    import random
+
+    rng = random.Random(5)
+    ids = rng.sample(range(10**6), 340)
+    path = ids[:300]
+    members = [(1, i) for i in path] + [(2, i) for i in ids[300:]]
+    edges = [(1, a, b) for a, b in zip(path, path[1:])]
+    edges += [(2, a, b) for a, b in zip(ids[300:320], ids[301:320])]
+    want = _min_label_union_find(ids, [(a, b) for _, a, b in edges])
+    assert set(want[i] for i in path) == {min(path)}
+    assert _nation_components(spark, members, edges) == want
+
+
+@pytest.mark.parametrize("name", ["entity_resolution", "entity_golden_record"])
+def test_entity_resolution_plans_run_no_python_worker(spark, name):
+    from pb_etl_spark.registry import all_queries
+    from tests.conftest import SF_DIR
+
+    plan = all_queries()[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    for node in (
+        "FlatMapCoGroupsInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "MapInPandas",
+        "MapInArrow",
+    ):
+        assert node not in plan, f"{name} runs a Python worker: {node}"
 
 
 @given(
